@@ -29,11 +29,13 @@ import os
 import uuid
 from collections import defaultdict
 
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from deltalake_datafusion_spark.delta import deletion_vectors as dvmod
+from deltalake_datafusion_spark.delta.filetable import FileView
 from deltalake_datafusion_spark.delta.fs import fs_for
-from deltalake_datafusion_spark.delta.predicates import prune_files
+from deltalake_datafusion_spark.delta.predicates import keep_mask, prune_files
 from deltalake_datafusion_spark.delta.scan import _logical_to_physical_map
 from deltalake_datafusion_spark.delta.schema_apply import apply_schema
 from deltalake_datafusion_spark.delta.snapshot import load_snapshot
@@ -86,7 +88,7 @@ def _dml_snapshot(spark, table_path: str, predicate: str | None):
         snap = load_snapshot(table_path, spark=spark, with_files=False)
         check_writable(snap)
         return snap, scanmod.collect_planned_files(
-            spark, table_path, predicate
+            spark, table_path, predicate, meta_snapshot=snap
         )
     snap = load_snapshot(table_path, spark=spark)
     check_writable(snap)
@@ -2208,14 +2210,16 @@ def _validate_partition_predicate(snap, predicate: str | None):
 
 def _partition_scope_files(snap, predicate: str | None):
     """Resolve an ``OPTIMIZE … WHERE`` scope driver-side: validate the
-    predicate, then select files by exact partition-value evaluation."""
+    predicate, then select files by exact partition-value evaluation
+    (a FileView: no ``AddFile`` is built until a victim is chosen)."""
     if not predicate:
-        return list(snap.files)
+        return snap.files
     _validate_partition_predicate(snap, predicate)
-    l2p = _logical_to_physical_map(snap.schema)
-    return prune_files(
-        snap.files, predicate, snap.schema, snap.partition_columns, l2p
+    mask = keep_mask(
+        snap.files, predicate, snap.schema, snap.partition_columns,
+        _logical_to_physical_map(snap.schema),
     )
+    return snap.files if mask is None else snap.files.filter(mask)
 
 
 def _cluster_by_zvalue(df, zcols: list[str], n_out: int):
@@ -2454,7 +2458,7 @@ def _optimize_attempt(
         else:
             cond = F.col("size") < F.lit(threshold)
         victims = scanmod.collect_planned_files(
-            spark, table_path, predicate, where=cond
+            spark, table_path, predicate, where=cond, meta_snapshot=snap
         )
         if only_partitions is not None:
             victims = [
@@ -2463,7 +2467,9 @@ def _optimize_attempt(
         # observability only (numFilesSkipped): in-scope count, one
         # metadata-scale job
         scope_count = (
-            scanmod.scan_files_spark(spark, table_path, predicate).count()
+            scanmod.scan_files_spark(
+                spark, table_path, predicate, meta_snapshot=snap
+            ).count()
             if cond is not None
             else len(victims)
         )
@@ -2472,22 +2478,24 @@ def _optimize_attempt(
         if only_partitions is not None:
             # auto-compaction scope: exactly the partitions the write
             # touched
-            scope = [
+            scope = FileView.of([
                 f for f in scope if f.partition_values in only_partitions
-            ]
+            ])
+        # victim conditions over the file table's columns
+        t = scope.table
         if purge:
-            victims = [f for f in scope if f.dv is not None]
+            dv_type = pc.struct_field(t["dv"], ["storageType"])
+            keep = pc.fill_null(pc.not_equal(dv_type, ""), False)
         elif incremental_cluster:
-            victims = [
-                f
-                for f in scope
-                if (f.tags or {}).get("clusteredBy")
-                != cluster_tag["clusteredBy"]
-            ]
+            tag = pc.map_lookup(t["tags"], "clusteredBy", "first")
+            keep = pc.fill_null(
+                pc.not_equal(tag, cluster_tag["clusteredBy"]), True
+            )
         elif zorder_by:
-            victims = list(scope)  # explicit ZORDER rewrites all in scope
+            keep = None  # explicit ZORDER rewrites all in scope
         else:
-            victims = [f for f in scope if f.size < threshold]
+            keep = pc.less(t["size"], threshold)
+        victims = list(scope if keep is None else scope.filter(keep))
         scope_count = len(scope)
     if (purge or incremental_cluster) and not victims:
         return {"files_compacted": 0, "files_added": 0, "version": snap.version}

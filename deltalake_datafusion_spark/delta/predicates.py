@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     DataType,
     DateType,
     DecimalType,
+    IntegralType,
     NumericType,
     StringType,
     StructType,
@@ -371,6 +372,19 @@ def _coerce(value: Any, dtype: DataType) -> Any:
                 return value
             if isinstance(value, str):
                 return value.lower() == "true"
+            return None
+        if isinstance(dtype, IntegralType):
+            # exact: Python compares int with int/float exactly, so
+            # ints beyond 2**53 never round into a false prune
+            if isinstance(value, bool):
+                return None
+            if isinstance(value, (int, float)):
+                return value
+            if isinstance(value, str):
+                try:
+                    return int(value)
+                except ValueError:
+                    return float(value)
             return None
         if isinstance(dtype, (NumericType, DecimalType)):
             if isinstance(value, bool):
@@ -843,14 +857,292 @@ def prune_files_df(files_df, predicate_sql: str | None, schema: StructType,
     return out.filter(cond)
 
 
-def prune_files(files, predicate_sql: str | None, schema, partition_columns,
-                logical_to_physical=None):
-    """Stats + partition pruning over an add-file list. Unparseable or
-    absent predicate → no pruning (keep all)."""
-    if not predicate_sql:
-        return list(files)
+class VectorEvaluator:
+    """:class:`StatsEvaluator`'s may-match lattice over a whole
+    :class:`~deltalake_datafusion_spark.delta.filetable.FileView` at
+    once: each IR node compiles to ``pyarrow.compute`` over the typed
+    min/max/nullCount/numRecords columns and the partition-value map,
+    giving one three-valued boolean array (null = unknown) per node.
+    Node for node it mirrors ``StatsEvaluator._eval`` — the same
+    keep-on-unknown logic, with ``_coerce``'s comparison domains."""
+
+    def __init__(self, view, schema: StructType, partition_columns,
+                 logical_to_physical=None):
+        self.view = view
+        self.n = len(view)
+        self.schema = schema
+        self.partition_columns = set(partition_columns)
+        self.l2p = logical_to_physical or {}
+        self._bounds_cache: dict = {}
+
+    def keep_mask(self, pred):
+        """True where the file may hold a matching row."""
+        import pyarrow.compute as pc
+
+        return pc.fill_null(self._eval(pred), True)
+
+    # -- helpers ------------------------------------------------------
+
+    def _unknown(self):
+        import pyarrow as pa
+
+        return pa.nulls(self.n, pa.bool_())
+
+    def _bounds(self, name: str):
+        """(min, max, null_count, num_records, dtype) arrays; dtype
+        None when the column is not in the schema."""
+        if name not in self._bounds_cache:
+            self._bounds_cache[name] = self._compute_bounds(name)
+        return self._bounds_cache[name]
+
+    def _compute_bounds(self, name: str):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from deltalake_datafusion_spark.delta.filetable import (
+            coerce_values,
+            stats_arrow_type,
+        )
+
+        dtype = _field_type(self.schema, name)
+        if dtype is None:
+            return None, None, None, None, None
+        if name not in self.partition_columns:
+            mn, mx, nulls, nrec = self.view.stats_bounds(
+                self.l2p.get(name, name), dtype
+            )
+            return mn, mx, nulls, nrec, dtype
+        pv = self.view.table["partition_values"].combine_chunks()
+        raw = pc.map_lookup(pv, name, "first")
+        has = pc.map_lookup(pv, name, "all").is_valid()  # key present
+        typ = stats_arrow_type(dtype)
+        v = (
+            coerce_values(raw, typ, dtype) if typ is not None
+            else pa.nulls(self.n, pa.null())
+        )
+        nrec = self.view.num_records()
+        all_null = pc.and_(raw.is_null(), has)
+        valid = v.is_valid()
+        zero = pa.scalar(0, pa.int64())
+        null_i = pa.scalar(None, pa.int64())
+        nulls = pc.if_else(all_null, nrec, pc.if_else(valid, zero, null_i))
+        nrec = pc.if_else(pc.or_(all_null, valid), nrec, null_i)
+        return v, v, nulls, nrec, dtype
+
+    @staticmethod
+    def _all_null(nulls, nrec):
+        """``0 < nrec == nulls`` (False where either is unknown)."""
+        import pyarrow.compute as pc
+
+        return pc.fill_null(
+            pc.and_(pc.greater(nrec, 0), pc.equal(nulls, nrec)), False
+        )
+
+    # -- three-valued core ------------------------------------------
+
+    def _eval(self, node):
+        import pyarrow.compute as pc
+
+        if isinstance(node, (And, Or)):
+            fold = pc.and_kleene if isinstance(node, And) else pc.or_kleene
+            out = None
+            for c in node.children:
+                r = self._eval(c)
+                out = r if out is None else fold(out, r)
+            return out
+        if isinstance(node, Not):
+            child = node.child
+            if isinstance(child, Cmp):
+                return self._eval_cmp(
+                    Cmp(_INVERSE[child.op], child.col, child.lit)
+                )
+            if isinstance(child, IsNull):
+                return self._eval_isnull(IsNull(child.col, not child.negated))
+            return self._unknown()
+        if isinstance(node, Cmp):
+            return self._eval_cmp(node)
+        if isinstance(node, StartsWith):
+            return self._eval_starts_with(node)
+        if isinstance(node, IsNull):
+            return self._eval_isnull(node)
+        if isinstance(node, InList):
+            return self._eval(
+                Or([Cmp("=", node.col, Lit(v)) for v in node.values])
+            )
+        return self._unknown()
+
+    def _eval_isnull(self, node):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        _, _, nulls, nrec, dtype = self._bounds(node.col.name)
+        if dtype is None:
+            return self._unknown()
+        # null (unknown) wherever nullCount or numRecords is
+        if not node.negated:
+            return pc.if_else(
+                nrec.is_valid(), pc.greater(nulls, 0),
+                pa.scalar(None, pa.bool_()),
+            )
+        return pc.greater(pc.subtract(nrec, nulls), 0)
+
+    def _eval_starts_with(self, node):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        mn, mx, nulls, nrec, dtype = self._bounds(node.col.name)
+        if not isinstance(dtype, StringType) or not node.prefix:
+            return self._unknown()
+        prune = pc.or_(
+            self._all_null(nulls, nrec),
+            pc.fill_null(pc.less(mx, node.prefix), False),
+        )
+        hi = _prefix_upper(node.prefix)
+        if hi is not None:
+            prune = pc.or_(
+                prune, pc.fill_null(pc.greater_equal(mn, hi), False)
+            )
+        return pc.if_else(prune, False, pa.scalar(None, pa.bool_()))
+
+    def _eval_cmp(self, node):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        mn, mx, nulls, nrec, dtype = self._bounds(node.col.name)
+        if dtype is None:
+            return self._unknown()
+        lit = _coerce(node.lit.value, dtype)
+        if node.lit.value is None or lit is None:
+            return self._unknown()
+        unknown = pa.scalar(None, pa.bool_())
+        all_null = self._all_null(nulls, nrec)
+        op = node.op
+        if op in ("=", "!="):
+            eq = _vcmp(mn, "=", lit)
+            eq = eq if eq is None else pc.and_(eq, _vcmp(mx, "=", lit))
+        if op == "=":
+            lo, hi = _vcmp(mn, ">", lit), _vcmp(mx, "<", lit)
+            if lo is None or hi is None:
+                r = None
+            else:
+                no_nulls = pc.fill_null(pc.equal(nulls, 0), True)
+                r = pc.if_else(
+                    pc.or_(lo, hi), False,
+                    pc.if_else(pc.and_(eq, no_nulls), True, unknown),
+                )
+        elif op == "!=":
+            no_nulls = pc.fill_null(pc.equal(nulls, 0), True)
+            r = None if eq is None else pc.if_else(
+                pc.and_(eq, no_nulls), False, unknown
+            )
+        else:
+            side = mn if op in ("<", "<=") else mx
+            c = _vcmp(side, op, lit)
+            r = None if c is None else pc.if_else(c, unknown, False)
+        both = pc.and_(mn.is_valid(), mx.is_valid())
+        r = unknown if r is None else pc.if_else(both, r, unknown)
+        return pc.if_else(all_null, False, r)
+
+
+_INVERSE = {"=": "!=", "!=": "=", "<": ">=", ">": "<=", "<=": ">", ">=": "<"}
+_OPS = {"=": "equal", "<": "less", "<=": "less_equal", ">": "greater",
+        ">=": "greater_equal"}
+
+
+def _vcmp(arr, op: str, lit):
+    """``arr <op> lit`` element-wise with Python's comparison result
+    (exact int-vs-float for integral columns), or None where Python
+    would raise TypeError (the evaluator's unknown)."""
+    import datetime as _dt
+    import math
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fn = getattr(pc, _OPS[op])
+    typ = arr.type
+    if pa.types.is_null(typ):
+        return pa.nulls(len(arr), pa.bool_())
+    if pa.types.is_integer(typ):
+        if isinstance(lit, float):
+            if math.isnan(lit):  # every comparison with NaN is False
+                return _where_valid(arr, False)
+            if math.isinf(lit):
+                # every int is below +inf and above -inf
+                return _where_valid(arr, {
+                    "=": False, "<": lit > 0, "<=": lit > 0,
+                    ">": lit < 0, ">=": lit < 0,
+                }[op])
+            k = math.floor(lit)
+            if k != lit:  # non-integral: x < r ⟺ x <= k, x > r ⟺ x > k
+                if op == "=":
+                    return _where_valid(arr, False)
+                op = {"<": "<=", "<=": "<=", ">": ">", ">=": ">"}[op]
+                fn = getattr(pc, _OPS[op])
+            lit = int(k)
+        if not isinstance(lit, int) or isinstance(lit, bool):
+            return None
+        if not -(2**63) <= lit < 2**63:
+            below = lit > 0  # every int64 is below a huge positive lit
+            return _where_valid(arr, {
+                "=": False, "<": below, "<=": below,
+                ">": not below, ">=": not below,
+            }[op])
+        return fn(arr, pa.scalar(lit, pa.int64()))
+    if pa.types.is_timestamp(typ):
+        if not isinstance(lit, _dt.datetime) or lit.tzinfo is not None:
+            return None
+    elif pa.types.is_date(typ):
+        if isinstance(lit, _dt.datetime) or not isinstance(lit, _dt.date):
+            return None
+    elif pa.types.is_floating(typ):
+        if isinstance(lit, bool) or not isinstance(lit, (int, float)):
+            return None
+        lit = float(lit)
+    elif pa.types.is_string(typ):
+        if not isinstance(lit, str):
+            return None
+    elif pa.types.is_boolean(typ):
+        if not isinstance(lit, bool):
+            return None
+    return fn(arr, pa.scalar(lit, typ))
+
+
+def _where_valid(arr, value: bool):
+    """``value`` where ``arr`` is non-null, null elsewhere."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return pc.if_else(
+        arr.is_valid(), pa.scalar(value), pa.scalar(None, pa.bool_())
+    )
+
+
+def keep_mask(view, predicate_sql: str | None, schema, partition_columns,
+              logical_to_physical=None):
+    """Vectorized stats + partition pruning over a FileView: a boolean
+    keep mask, or None when nothing can be pruned (no predicate, or
+    one outside the parsed subset)."""
+    if not predicate_sql or not len(view):
+        return None
     pred = try_parse_predicate(predicate_sql)
     if pred is None:
-        return list(files)
-    ev = StatsEvaluator(schema, partition_columns, logical_to_physical)
-    return [f for f in files if ev.may_match(f, pred)]
+        return None
+    return VectorEvaluator(
+        view, schema, partition_columns, logical_to_physical
+    ).keep_mask(pred)
+
+
+def prune_files(files, predicate_sql: str | None, schema, partition_columns,
+                logical_to_physical=None):
+    """Stats + partition pruning over an add-file sequence (a
+    snapshot's FileView or any list of AddFile): the kept files, in
+    path order. Only kept files become AddFile objects. Unparseable
+    or absent predicate → no pruning (keep all)."""
+    from deltalake_datafusion_spark.delta.filetable import FileView
+
+    view = FileView.of(files)
+    mask = keep_mask(
+        view, predicate_sql, schema, partition_columns, logical_to_physical
+    )
+    return list(view if mask is None else view.filter(mask))

@@ -41,10 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from deltalake_datafusion_spark.delta.predicates import prune_files
+from deltalake_datafusion_spark.delta.filetable import FileView
+from deltalake_datafusion_spark.delta.predicates import keep_mask
 from deltalake_datafusion_spark.delta.schema_apply import apply_schema
 from deltalake_datafusion_spark.delta.snapshot import AddFile, Snapshot, load_snapshot
-from deltalake_datafusion_spark.delta.stats import parse_stats
 from deltalake_datafusion_spark.delta.writer import physical_schema
 
 
@@ -66,22 +66,23 @@ def _logical_to_physical_map(schema: StructType) -> dict[str, str]:
     return out
 
 
-def _limit_truncate(files: list[AddFile], limit: int) -> list[AddFile]:
+def _limit_truncate(view: FileView, limit: int) -> FileView:
     """Limit pushdown at file granularity (reference S6:
-    ``delta/mod.rs:213,223-226``): stop planning files once known row
-    counts cover the limit. Files without numRecords stats count as
-    unknown → keep and stop truncating."""
-    out, covered = [], 0
-    for f in files:
-        out.append(f)
-        stats = parse_stats(f.stats)
-        n = stats.get("numRecords") if stats else None
-        if n is None:
-            return files  # unknown cardinality — cannot truncate safely
-        covered += n
-        if covered >= limit:
-            return out
-    return out
+    ``delta/mod.rs:213,223-226``): in path order, stop planning files
+    once known row counts cover the limit. A file without numRecords
+    stats before that point counts as unknown → keep everything."""
+    import numpy as np
+
+    if not len(view):
+        return view
+    table = view.sorted_table()
+    nrec = FileView(table).num_records()
+    known = nrec.is_valid().to_numpy(zero_copy_only=False)
+    covered = np.cumsum(nrec.fill_null(0).to_numpy())
+    stop = np.flatnonzero(~known | (covered >= limit))
+    if not len(stop) or not known[stop[0]]:
+        return view
+    return FileView(table.slice(0, int(stop[0]) + 1))
 
 
 def _pruning_predicate(snapshot: Snapshot, predicate: str | None) -> str | None:
@@ -109,15 +110,22 @@ def scan_files(
     predicate: str | None = None,
     limit: int | None = None,
 ) -> list[AddFile]:
-    """The scan-metadata planner (S2): pruned, limit-truncated files."""
-    l2p = _logical_to_physical_map(snapshot.schema)
-    files = prune_files(
-        snapshot.files,
+    """The scan-metadata planner (S2): pruned, limit-truncated files.
+    Pruning and truncation run over the snapshot's Arrow file table;
+    only the surviving files become ``AddFile`` objects."""
+    view = snapshot.files
+    mask = keep_mask(
+        view,
         _pruning_predicate(snapshot, predicate),
         snapshot.schema,
         snapshot.partition_columns,
-        l2p,
+        _logical_to_physical_map(snapshot.schema),
     )
+    if mask is not None:
+        view = view.filter(mask)
+    if limit is not None and predicate is None:
+        view = _limit_truncate(view, limit)
+    files = list(view)
     if predicate and files:
         # bloom-index pruning (delta/bloom_index.py): equality probes
         # against the table's sidecar per-file filters; keep-on-unknown
@@ -134,8 +142,6 @@ def scan_files(
                 files = prune_files_bloom(files, predicate, idx)
         except (ValueError, OSError):
             pass
-    if limit is not None and predicate is None:
-        files = _limit_truncate(files, limit)
     return files
 
 
@@ -227,6 +233,7 @@ def _inject_partition_values(
 def scan_files_spark(
     spark, table_path: str, predicate: str | None = None,
     version: int | None = None,
+    meta_snapshot: Snapshot | None = None,
 ):
     """Spark-side scan planning for tables whose file lists outgrow
     the driver: log replay + stats pruning as ONE distributed job;
@@ -235,15 +242,17 @@ def scan_files_spark(
 
     Returns a DataFrame with columns path, size, partitionValues,
     stats, deletionVector — the same planning inputs the driver-side
-    :func:`scan_files` produces.
+    :func:`scan_files` produces. ``meta_snapshot``: the caller's
+    metadata-only snapshot of the same version, reused instead of
+    replaying the log's metadata again.
     """
     from deltalake_datafusion_spark.delta.predicates import prune_files_df
-    from deltalake_datafusion_spark.delta.snapshot import log_replay_df, load_snapshot
+    from deltalake_datafusion_spark.delta.snapshot import log_replay_df
 
     # metadata-only replay: the whole point of this planner is that
     # the DRIVER never parses the add actions — schema / partition
     # columns / protocol are all it needs here
-    snap = load_snapshot(
+    snap = meta_snapshot or load_snapshot(
         table_path, version=version, spark=spark, with_files=False
     )
     files_df = log_replay_df(spark, table_path, version)
@@ -263,11 +272,15 @@ def scan_files_spark(
     )
 
 
-# File count above which "auto" planning replays + prunes the log as
-# a Spark job instead of on the driver (read from _last_checkpoint's
-# action count — no log read needed to decide). ~1e5 add actions is
-# where driver-side JSON/dict replay starts costing seconds.
-SPARK_PLANNER_FILE_THRESHOLD = 100_000
+# Estimated log-action count above which "auto" planning replays +
+# prunes the log as a Spark job instead of on the driver (decided from
+# _last_checkpoint's size and the commit-tail bytes — no log read).
+# With the columnar driver replay the driver planner wins on all three
+# consumers (scan, DML candidates, OPTIMIZE victims) up to the largest
+# size measured, 1e6 adds (tools/bench_planner.py, SCALING.md), and
+# 1e6 is also the cap: past it the driver would hold ~250 MB of stats
+# per 1e6 adds, which is what the Spark planner is for.
+SPARK_PLANNER_FILE_THRESHOLD = 1_000_000
 
 # Conservative bytes-per-action divisor for estimating how many log
 # actions live in post-checkpoint commit JSONs (a serialized add
@@ -314,6 +327,7 @@ def collect_planned_files(
     spark, table_path: str, predicate: str | None = None,
     version: int | None = None,
     where=None,
+    meta_snapshot: Snapshot | None = None,
 ) -> list[AddFile]:
     """Distributed planning → driver-side ``AddFile`` list: log
     replay + pruning run as a Spark job (:func:`scan_files_spark`);
@@ -321,10 +335,13 @@ def collect_planned_files(
     read path, distributed DML candidate planning, and distributed
     OPTIMIZE victim selection (``where``: an extra executor-side
     filter over the planned-file rows — e.g. ``size < threshold`` —
-    so only actual victims ever reach the driver)."""
+    so only actual victims ever reach the driver). ``meta_snapshot``
+    is passed on to :func:`scan_files_spark`."""
     from deltalake_datafusion_spark.delta.snapshot import _parse_dv
 
-    planned = scan_files_spark(spark, table_path, predicate, version)
+    planned = scan_files_spark(
+        spark, table_path, predicate, version, meta_snapshot=meta_snapshot
+    )
     if where is not None:
         planned = planned.filter(where)
     rows = planned.collect()
@@ -379,7 +396,9 @@ def scan_spark_planned(
     meta_snap = load_snapshot(
         table_path, version=version, spark=spark, with_files=False
     )
-    files = collect_planned_files(spark, table_path, predicate, version)
+    files = collect_planned_files(
+        spark, table_path, predicate, version, meta_snapshot=meta_snap
+    )
     snap = Snapshot(
         table_path=meta_snap.table_path,
         version=meta_snap.version,

@@ -6,19 +6,27 @@ log-replay provider (reference:
 ``crates/datafusion/src/table_provider/delta_log.rs:139-421``). Where
 the reference inverts control through delta-kernel callbacks (storage
 list → JSON/parquet read → expression eval), here the "kernel" is
-plain Python on the driver:
+Arrow on the driver:
 
 1. list ``_delta_log/`` (ordered), find ``_last_checkpoint``;
-2. read checkpoint parquet (if any) + JSON commits after it;
-3. replay: latest metaData/protocol win; (path, dvId)-keyed adds,
-   removes tombstone earlier adds.
+2. read the checkpoint parquet (if any) with ``pyarrow.parquet`` and
+   the JSON commits after it with ``pyarrow.json``. Only the few
+   metaData / protocol / txn / domainMetadata actions become dicts;
+   add/remove actions stay Arrow columns;
+3. replay: latest metaData/protocol win; file actions are reconciled
+   by path in one vectorized last-action-wins pass (hash group-by over
+   the actions in log order), so the live-file set is an Arrow table
+   (``filetable.FILE_SCHEMA``). ``Snapshot.files`` is a read-only
+   sequence view over it: ``len()`` is O(1) and ``AddFile`` objects
+   are built only for the files a caller iterates.
 
 Scale: log replay is metadata-scale (KBs..GBs of JSON/parquet, not
 table data). Driver-side replay handles logs up to ~1e6 actions
-comfortably; :func:`log_replay_df` provides the same replay as a
-Spark job (window dedup over the actions DataFrame) for tables whose
-logs outgrow the driver — the cutover mirrors the reference running
-snapshot loads on blocking threads (``session.rs:294-299``).
+(``scan.SPARK_PLANNER_FILE_THRESHOLD``); :func:`log_replay_df`
+provides the same replay as a Spark job (window dedup over the actions
+DataFrame) for tables whose logs outgrow the driver — the cutover
+mirrors the reference running snapshot loads on blocking threads
+(``session.rs:294-299``).
 """
 
 from __future__ import annotations
@@ -26,11 +34,11 @@ from __future__ import annotations
 import json
 import os
 import re
-import urllib.parse
 from dataclasses import dataclass, field
 
 from pyspark.sql.types import StructType
 
+from deltalake_datafusion_spark.delta.filetable import FileView
 from deltalake_datafusion_spark.delta.fs import fs_for, strip_scheme
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -118,10 +126,18 @@ class Snapshot:
     version: int
     metadata: Metadata
     protocol: Protocol
-    files: list[AddFile]
-    tombstones: list[dict] = field(default_factory=list)
+    files: FileView  # any Sequence[AddFile] is converted
+    # remove actions seen during replay, as Arrow struct arrays
+    tombstone_arrays: list = field(default_factory=list)
     app_transactions: dict[str, int] = field(default_factory=dict)
     domain_metadata: dict[str, str] = field(default_factory=dict)
+
+    def __post_init__(self):
+        self.files = FileView.of(self.files)
+
+    @property
+    def tombstones(self) -> list[dict]:
+        return [r for a in self.tombstone_arrays for r in a.to_pylist()]
 
     @property
     def schema(self) -> StructType:
@@ -132,7 +148,10 @@ class Snapshot:
         return self.metadata.partition_columns
 
     def file_paths(self) -> list[str]:
-        return [os.path.join(self.table_path, f.path) for f in self.files]
+        return [
+            os.path.join(self.table_path, p)
+            for p in self.files.sorted_table()["path"].to_pylist()
+        ]
 
     def get_property(self, key: str, default: str | None = None) -> str | None:
         return self.metadata.configuration.get(key, default)
@@ -222,10 +241,28 @@ def _check_protocol(protocol: Protocol) -> None:
             raise DeltaProtocolError(f"unsupported reader features: {sorted(unsupported)}")
 
 
+class _LogBatch:
+    """One log file (commit JSON, compacted JSON or checkpoint),
+    parsed: its metaData/protocol/txn/domainMetadata actions as dicts
+    in file order, and its add/remove actions as one Arrow table
+    (``add`` and ``remove`` struct columns, one row per file action,
+    in file order) — None when the file actions were not read."""
+
+    __slots__ = ("meta", "file_actions")
+
+    def __init__(self, meta: list[dict], file_actions=None):
+        self.meta = meta
+        self.file_actions = file_actions
+
+
+_META_KEYS = ("metaData", "protocol", "txn", "domainMetadata")
+
+
 def _read_checkpoint_actions(
     checkpoint_paths: list[str], with_files: bool = True
-) -> list[dict]:
-    """Checkpoint parquet → action dicts (driver-side, pyarrow).
+) -> _LogBatch:
+    """Checkpoint parquet → one :class:`_LogBatch` (driver-side,
+    pyarrow; the file actions stay columnar).
 
     Metadata-scale I/O, same role as the reference's kernel parquet
     handler reading checkpoints
@@ -233,62 +270,198 @@ def _read_checkpoint_actions(
     ``with_files=False`` projects away the add/remove columns so a
     million-file checkpoint costs the driver only its metadata rows.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
-    actions: list[dict] = []
+    meta: list[dict] = []
+    file_tables = []
     sidecars: list[str] = []
+
+    def take(table):
+        names = set(table.column_names)
+        meta_cols = [c for c in _META_KEYS if c in names]
+        if meta_cols:
+            sub = table.select(meta_cols)
+            any_set = None
+            for c in meta_cols:
+                v = sub[c].is_valid()
+                any_set = v if any_set is None else pc.or_(any_set, v)
+            for row in sub.filter(any_set).to_pylist():
+                meta.append({k: v for k, v in row.items() if v is not None})
+        if "sidecar" in names:
+            # V2 checkpoint: file actions live in _sidecars/
+            sidecars.extend(
+                r["path"] for r in table["sidecar"].drop_null().to_pylist()
+            )
+        file_cols = [c for c in ("add", "remove") if c in names]
+        if with_files and file_cols:
+            ft = table.select(file_cols)
+            for c in ("add", "remove"):
+                if c not in names:
+                    typ = _file_action_schema().field(c).type
+                    ft = ft.append_column(c, pa.nulls(ft.num_rows, typ))
+            valid = pc.or_(ft["add"].is_valid(), ft["remove"].is_valid())
+            file_tables.append(ft.filter(valid).select(["add", "remove"]))
+
     for p in checkpoint_paths:
         if with_files:
-            table = papq.read_table(p)
+            take(papq.read_table(p))
         else:
             avail = set(papq.read_schema(p).names)
-            cols = [
-                c for c in ("metaData", "protocol", "txn", "domainMetadata")
-                if c in avail
-            ]
-            table = papq.read_table(p, columns=cols)
-        for row in table.to_pylist():
-            row = {k: v for k, v in row.items() if v is not None}
-            if "sidecar" in row:
-                # V2 checkpoint: file actions live in _sidecars/
-                sidecars.append(row["sidecar"]["path"])
-                continue
-            if row and set(row) != {"checkpointMetadata"}:
-                actions.append(row)
+            cols = [c for c in _META_KEYS + ("sidecar",) if c in avail]
+            take(papq.read_table(p, columns=cols))
     if sidecars and with_files:
         base = os.path.join(os.path.dirname(checkpoint_paths[0]), "_sidecars")
         for name in sidecars:
-            table = papq.read_table(os.path.join(base, name))
-            for row in table.to_pylist():
-                row = {k: v for k, v in row.items() if v is not None}
-                if row:
-                    actions.append(row)
-    return actions
+            take(papq.read_table(os.path.join(base, name)))
+    return _LogBatch(meta, file_tables)
 
 
-_META_ACTION_MARKS = (
-    '"metaData"', '"protocol"', '"txn"', '"domainMetadata"',
-)
+_META_ACTION_MARKS = tuple(f'"{k}"' for k in _META_KEYS)
 
 
 def _iter_commit_actions(path: str, fs, with_files: bool = True) -> list[dict]:
-    raw = fs.read_bytes(path).decode("utf-8")
+    """Every action of one commit file as a dict (CDF, streaming,
+    clone, log compaction and the writer's conflict check read commits
+    action by action; snapshot replay uses :func:`_read_commit_file`)."""
+    return _actions_of(fs.read_bytes(path), with_files)
+
+
+def _actions_of(raw: bytes, with_files: bool = True) -> list[dict]:
+    text = raw.decode("utf-8")
     if with_files:
         return [
-            json.loads(line) for line in raw.splitlines() if line.strip()
+            json.loads(line) for line in text.splitlines() if line.strip()
         ]
-    # metadata-only replay: skip the json parse for add/remove/cdc
-    # lines (the overwhelming bulk of a large log) via a substring
-    # prefilter — a line is parsed only when it can possibly carry
+    # metadata-only: skip the json parse for add/remove/cdc lines (the
+    # overwhelming bulk of a large log) via a substring prefilter — a
+    # line is parsed only when it can possibly carry
     # metaData/protocol/txn/domainMetadata. False positives (e.g. a
     # partition column literally named txn) just cost one parse;
     # false negatives are impossible (a real action line contains its
     # unescaped key).
     return [
         json.loads(line)
-        for line in raw.splitlines()
+        for line in text.splitlines()
         if line.strip() and any(m in line for m in _META_ACTION_MARKS)
     ]
+
+
+def _file_action_schema():
+    import pyarrow as pa
+
+    from deltalake_datafusion_spark.delta.filetable import DV_TYPE
+
+    return pa.schema([
+        ("add", pa.struct([
+            ("path", pa.string()),
+            ("size", pa.int64()),
+            ("modificationTime", pa.int64()),
+            ("stats", pa.string()),
+            ("deletionVector", DV_TYPE),
+            ("baseRowId", pa.int64()),
+            ("defaultRowCommitVersion", pa.int64()),
+        ])),
+        ("remove", pa.struct([("path", pa.string())])),
+    ])
+
+
+def _parse_commit_bytes(raw: bytes, with_files: bool = True) -> _LogBatch:
+    """One JSON log file's bytes → :class:`_LogBatch`.
+
+    ``with_files`` → ONE ``pyarrow.json`` pass (multi-threaded over
+    256 KiB blocks): the explicit schema pins the typed add/remove
+    fields, everything else — ``partitionValues``/``tags`` and the
+    metaData/protocol/txn/domainMetadata actions — is inferred, and
+    only the few non-file rows become dicts. A file the Arrow reader
+    rejects (a type conflict inference cannot unify) is parsed line by
+    line instead. Without files, only the lines that can hold a
+    non-file action are parsed."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.json as pj
+
+    if not with_files:
+        return _LogBatch(_actions_of(raw, with_files=False))
+    try:
+        t = pj.read_json(
+            pa.BufferReader(raw),
+            read_options=pj.ReadOptions(block_size=1 << 18),
+            parse_options=pj.ParseOptions(
+                explicit_schema=_file_action_schema(),
+                unexpected_field_behavior="infer",
+            ),
+        )
+    except pa.ArrowInvalid:
+        return _parse_commit_lines(raw)
+    meta_cols = [c for c in _META_KEYS if c in t.column_names]
+    meta = []
+    if meta_cols:
+        sub = t.select(meta_cols)
+        any_set = sub[meta_cols[0]].is_valid()
+        for c in meta_cols[1:]:
+            any_set = pc.or_(any_set, sub[c].is_valid())
+        for row in sub.filter(any_set).to_pylist():
+            meta.append(_drop_nulls(row))
+    files = t.select(["add", "remove"])
+    files = files.filter(
+        pc.or_(files["add"].is_valid(), files["remove"].is_valid())
+    )
+    return _LogBatch(meta, [files])
+
+
+def _drop_nulls(v):
+    """Inferred struct rows carry every key seen in the file; drop the
+    null ones so a row reads like the JSON object it came from."""
+    if isinstance(v, dict):
+        return {k: _drop_nulls(x) for k, x in v.items() if x is not None}
+    return v
+
+
+def _parse_commit_lines(raw: bytes) -> _LogBatch:
+    """Line-by-line fallback of :func:`_parse_commit_bytes`."""
+    import pyarrow as pa
+
+    from deltalake_datafusion_spark.delta.filetable import STR_MAP
+
+    actions = [a for a in _actions_of(raw) if isinstance(a, dict)]
+    meta = [a for a in actions if any(a.get(k) for k in _META_KEYS)]
+    rows = [a for a in actions if a.get("add") or a.get("remove")]
+    schema = _file_action_schema()
+    add_t = pa.struct(
+        list(schema.field("add").type)
+        + [("partitionValues", STR_MAP), ("tags", STR_MAP)]
+    )
+
+    def add_row(add):
+        if not add:
+            return None
+        out = dict(add)
+        for k in ("partitionValues", "tags"):
+            out[k] = [
+                (kk, None if v is None else str(v))
+                for kk, v in (add.get(k) or {}).items()
+            ]
+        return out
+
+    files = pa.table({
+        "add": pa.array([add_row(a.get("add")) for a in rows], add_t),
+        "remove": pa.array(
+            [
+                {"path": a["remove"]["path"]} if a.get("remove") else None
+                for a in rows
+            ],
+            schema.field("remove").type,
+        ),
+    })
+    return _LogBatch(meta, [files])
+
+
+def _read_commit_file(path: str, fs, with_files: bool = True) -> _LogBatch:
+    """One JSON log file (commit or compacted range) → :class:`_LogBatch`.
+    ``with_files=False`` skips the add/remove actions entirely."""
+    return _parse_commit_bytes(fs.read_bytes(path), with_files)
 
 
 def _commit_timestamp(path: str, fs) -> int | None:
@@ -375,29 +548,95 @@ def resolve_version_at_timestamp(table_path: str, ts_ms: int, spark=None) -> int
     return commits[best][0]
 
 
-class _ReplayState:
-    """Mutable log-replay accumulator (shared by full and incremental
-    replay)."""
+class _Replay:
+    """Log-replay accumulator, shared by full and incremental replay.
 
-    __slots__ = ("metadata", "protocol", "adds", "tombstones",
-                 "app_transactions", "domain_metadata")
+    Non-file actions are applied as they arrive (latest
+    metaData/protocol win, ``txn`` last-write-wins per appId, domain
+    metadata set/removed). File actions are only collected; at
+    :meth:`finish` they are reconciled in one vectorized pass: per
+    path the LAST action wins (an add keeps the file live, a remove
+    drops it) — Delta guarantees at most one live add per path, and a
+    re-add (e.g. with a new DV) replaces the previous entry."""
 
-    def __init__(self, metadata=None, protocol=None, adds=None,
-                 tombstones=None, app_transactions=None,
-                 domain_metadata=None):
-        self.metadata: Metadata | None = metadata
-        self.protocol: Protocol = protocol or Protocol()
-        self.adds: dict[str, AddFile] = adds or {}
-        self.tombstones: list[dict] = tombstones or []
-        self.app_transactions: dict[str, int] = app_transactions or {}
-        self.domain_metadata: dict[str, str] = domain_metadata or {}
+    def __init__(self, base: Snapshot | None = None):
+        self.metadata: Metadata | None = base.metadata if base else None
+        self.protocol: Protocol = base.protocol if base else Protocol()
+        self.app_transactions: dict[str, int] = (
+            dict(base.app_transactions) if base else {}
+        )
+        self.domain_metadata: dict[str, str] = (
+            dict(base.domain_metadata) if base else {}
+        )
+        self.live = base.files.table if base else None
+        self.tombstone_arrays: list = (
+            list(base.tombstone_arrays) if base else []
+        )
+        self.actions: list = []  # FILE_SCHEMA + is_add, replay order
 
+    def apply(self, batch: _LogBatch) -> None:
+        for a in batch.meta:
+            self._apply_meta(a)
+        for raw in batch.file_actions or ():
+            if raw.num_rows:
+                self.actions.append(self._file_actions(raw))
 
-def _apply_actions(actions, state: _ReplayState, with_files: bool) -> None:
-    for a in actions:
-        if "metaData" in a and a["metaData"]:
+    def _partition_keys(self) -> frozenset:
+        """partitionValues keys whose null value is meaningful: the
+        partition columns under their logical and physical names."""
+        if self.metadata is None or not self.metadata.partition_columns:
+            return frozenset()
+        keys = set(self.metadata.partition_columns)
+        try:
+            for f in self.metadata.schema.fields:
+                if f.name in keys:
+                    keys.add((f.metadata or {}).get(
+                        "delta.columnMapping.physicalName", f.name
+                    ))
+        except ValueError:
+            pass
+        return frozenset(keys)
+
+    def _file_actions(self, raw):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from deltalake_datafusion_spark.delta.filetable import (
+            FILE_SCHEMA,
+            decode_paths,
+            file_rows,
+        )
+
+        add = raw["add"].combine_chunks()
+        rm = raw["remove"].combine_chunks()
+        is_add = add.is_valid()
+        adds = file_rows(add.filter(is_add), self._partition_keys())
+        removed = rm.filter(pc.invert(is_add))
+        if len(removed):
+            self.tombstone_arrays.append(removed)
+        rm_paths = decode_paths(pc.struct_field(removed, ["path"]))
+        removes = pa.Table.from_arrays(
+            [rm_paths] + [
+                pa.nulls(len(removed), f.type) for f in FILE_SCHEMA
+                if f.name != "path"
+            ],
+            schema=FILE_SCHEMA,
+        )
+        # restore file order: adds and removes interleave by line
+        pos = pa.concat_arrays([
+            pc.indices_nonzero(is_add),
+            pc.indices_nonzero(pc.invert(is_add)),
+        ])
+        t = pa.concat_tables([adds, removes]).append_column(
+            "is_add",
+            pa.array([True] * adds.num_rows + [False] * removes.num_rows),
+        )
+        return t.take(pc.sort_indices(pos)) if removes.num_rows else t
+
+    def _apply_meta(self, a: dict) -> None:
+        if a.get("metaData"):
             md = a["metaData"]
-            state.metadata = Metadata(
+            self.metadata = Metadata(
                 id=md.get("id", ""),
                 schema_string=md.get("schemaString", "{}"),
                 partition_columns=list(md.get("partitionColumns") or []),
@@ -406,46 +645,15 @@ def _apply_actions(actions, state: _ReplayState, with_files: bool) -> None:
                 created_time=md.get("createdTime"),
                 description=md.get("description"),
             )
-        elif "protocol" in a and a["protocol"]:
+        elif a.get("protocol"):
             pr = a["protocol"]
-            state.protocol = Protocol(
+            self.protocol = Protocol(
                 min_reader_version=pr.get("minReaderVersion", 1),
                 min_writer_version=pr.get("minWriterVersion", 2),
                 reader_features=list(pr.get("readerFeatures") or []),
                 writer_features=list(pr.get("writerFeatures") or []),
             )
-        elif "add" in a and a["add"]:
-            if not with_files:
-                continue
-            ad = a["add"]
-            path = urllib.parse.unquote(ad["path"])
-            dv = _parse_dv(ad.get("deletionVector"))
-            stats = ad.get("stats")
-            if not stats and ad.get("stats_parsed"):
-                # DAT ``stats_as_struct``: checkpoints may carry stats
-                # as a typed struct column instead of the JSON string —
-                # normalize so the skipping evaluator sees one format
-                # (dates/timestamps serialize to their ISO strings).
-                stats = json.dumps(ad["stats_parsed"], default=str)
-            state.adds[path] = AddFile(
-                path=path,
-                size=ad.get("size", 0),
-                modification_time=ad.get("modificationTime", 0),
-                partition_values=dict(ad.get("partitionValues") or {}),
-                stats=stats,
-                dv=dv,
-                base_row_id=ad.get("baseRowId"),
-                default_row_commit_version=ad.get("defaultRowCommitVersion"),
-                tags=dict(ad["tags"]) if ad.get("tags") else None,
-            )
-        elif "remove" in a and a["remove"]:
-            if not with_files:
-                continue
-            rm = a["remove"]
-            path = urllib.parse.unquote(rm["path"])
-            state.adds.pop(path, None)
-            state.tombstones.append(rm)
-        elif "txn" in a and a["txn"]:
+        elif a.get("txn"):
             tx = a["txn"]
             app = tx.get("appId")
             if app is not None:
@@ -453,31 +661,64 @@ def _apply_actions(actions, state: _ReplayState, with_files: bool) -> None:
                 # replay semantics; replay is forward so the latest
                 # commit's txn overwrites) — a later LOWER version is
                 # honored, matching what a foreign reader would see
-                state.app_transactions[app] = tx.get("version", -1)
-        elif "domainMetadata" in a and a["domainMetadata"]:
+                self.app_transactions[app] = tx.get("version", -1)
+        elif a.get("domainMetadata"):
             dm = a["domainMetadata"]
             if dm.get("removed"):
-                state.domain_metadata.pop(dm.get("domain"), None)
+                self.domain_metadata.pop(dm.get("domain"), None)
             else:
-                state.domain_metadata[dm["domain"]] = dm.get(
+                self.domain_metadata[dm["domain"]] = dm.get(
                     "configuration", ""
                 )
 
+    def _reconcile(self):
+        """Live-file table after every collected action: last action
+        per path wins (hash group-by over the actions in replay
+        order); live rows whose path any action touched are
+        superseded."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-def _finish_snapshot(table_path: str, version: int, state: _ReplayState) -> Snapshot:
-    if state.metadata is None:
-        raise DeltaProtocolError(f"no metaData action found in log at {table_path}")
-    _check_protocol(state.protocol)
-    return Snapshot(
-        table_path=table_path,
-        version=version,
-        metadata=state.metadata,
-        protocol=state.protocol,
-        files=sorted(state.adds.values(), key=lambda f: f.path),
-        tombstones=state.tombstones,
-        app_transactions=state.app_transactions,
-        domain_metadata=state.domain_metadata,
-    )
+        from deltalake_datafusion_spark.delta.filetable import FILE_SCHEMA
+
+        live = self.live
+        if not self.actions:
+            return live
+        acts = pa.concat_tables(self.actions)
+        acts = acts.append_column(
+            "i", pa.array(range(acts.num_rows), pa.int64())
+        )
+        last = acts.group_by("path", use_threads=False).aggregate(
+            [("i", "max")]
+        )
+        # every path acted on once (an append-only log): nothing to drop
+        won = acts if last.num_rows == acts.num_rows else acts.take(
+            last["i_max"]
+        )
+        won = won.filter(won["is_add"]).select(FILE_SCHEMA.names)
+        if live is None or live.num_rows == 0:
+            return won
+        touched = pc.is_in(live["path"], value_set=acts["path"])
+        return pa.concat_tables([live.filter(pc.invert(touched)), won])
+
+    def finish(self, table_path: str, version: int) -> Snapshot:
+        from deltalake_datafusion_spark.delta.filetable import FileView
+
+        if self.metadata is None:
+            raise DeltaProtocolError(
+                f"no metaData action found in log at {table_path}"
+            )
+        _check_protocol(self.protocol)
+        return Snapshot(
+            table_path=table_path,
+            version=version,
+            metadata=self.metadata,
+            protocol=self.protocol,
+            files=FileView(self._reconcile()),
+            tombstone_arrays=self.tombstone_arrays,
+            app_transactions=self.app_transactions,
+            domain_metadata=self.domain_metadata,
+        )
 
 
 def load_snapshot(
@@ -545,21 +786,10 @@ def load_snapshot(
                 )
         if not tail:
             return base
-        state = _ReplayState(
-            metadata=base.metadata,
-            protocol=base.protocol,
-            adds={f.path: f for f in base.files},
-            tombstones=list(base.tombstones),
-            app_transactions=dict(base.app_transactions),
-            domain_metadata=dict(base.domain_metadata),
-        )
-        actual_version = base.version
-        for v, p in tail:
-            _apply_actions(
-                _iter_commit_actions(p, fs, with_files), state, with_files
-            )
-            actual_version = v
-        return _finish_snapshot(table_path, actual_version, state)
+        replay = _Replay(base)
+        for _v, p in tail:
+            replay.apply(_read_commit_file(p, fs, with_files))
+        return replay.finish(table_path, tail[-1][0])
 
     # Choose a checkpoint ≤ requested version, then replay commits after it.
     usable_cp: list[tuple[int, str]] = [
@@ -591,21 +821,16 @@ def load_snapshot(
                 f"version {version} not available (latest {max_seen})"
             )
 
-    # Keyed by path (inside _ReplayState.adds): Delta guarantees at most
-    # one live add per path, and a re-add (e.g. with a new DV) replaces
-    # the previous entry — so replay is O(1) per action regardless of
-    # log length.
-    state = _ReplayState()
-    _apply_actions(_read_checkpoint_actions(cp_paths, with_files), state, with_files)
+    replay = _Replay()
+    if cp_paths:
+        replay.apply(_read_checkpoint_actions(cp_paths, with_files))
     actual_version = cp_version
     for _kind, _s, seg_end, p in _plan_commit_replay(
         replay_commits, compacted, cp_version, version
     ):
-        _apply_actions(
-            _iter_commit_actions(p, fs, with_files), state, with_files
-        )
+        replay.apply(_read_commit_file(p, fs, with_files))
         actual_version = seg_end
-    return _finish_snapshot(table_path, actual_version, state)
+    return replay.finish(table_path, actual_version)
 
 
 def _plan_commit_replay(

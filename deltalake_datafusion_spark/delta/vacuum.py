@@ -307,20 +307,26 @@ def _tombstone_candidates(spark, table_path: str, cutoff_ms: int):
     return data.unionByName(dv)
 
 
+# the driver-built referenced set is broadcast to the anti-join
+_BROADCAST_REFERENCED_MAX = 100_000
+
+
 def _referenced_paths_df(spark, table_path: str, snap):
     """Live (data + DV) file paths as (one-column DataFrame,
     small_enough_to_broadcast).
 
     Small tables build the set on the driver. Past the distributed-
-    planning threshold the set comes from :func:`log_replay_df` as a
-    Spark job — a 1e7-file table's referenced set never materializes
-    driver-side (the anti-join then runs shuffle-to-shuffle instead of
-    against a broadcast)."""
+    planning threshold — or past what is worth broadcasting — the set
+    comes from :func:`log_replay_df` as a Spark job: a 1e7-file table's
+    referenced set never materializes driver-side (the anti-join then
+    runs shuffle-to-shuffle instead of against a broadcast)."""
     from deltalake_datafusion_spark.delta.scan import (
         SPARK_PLANNER_FILE_THRESHOLD,
     )
 
-    if len(snap.files) <= SPARK_PLANNER_FILE_THRESHOLD:
+    if len(snap.files) <= min(
+        SPARK_PLANNER_FILE_THRESHOLD, _BROADCAST_REFERENCED_MAX
+    ):
         referenced = {os.path.join(table_path, f.path) for f in snap.files}
         for f in snap.files:
             if f.dv and f.dv.storage_type == "u":

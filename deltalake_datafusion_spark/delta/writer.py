@@ -2569,6 +2569,29 @@ def write_checkpoint_v2(
 DISTRIBUTED_CHECKPOINT_THRESHOLD = 100_000
 
 
+def _state_totals(snapshot: Snapshot) -> dict:
+    """File count, bytes and DV totals from the file table's columns
+    (no ``AddFile`` is built)."""
+    import pyarrow.compute as pc
+
+    t = snapshot.files.table
+    dv = t["dv"]
+    has_dv = pc.fill_null(
+        pc.not_equal(pc.struct_field(dv, ["storageType"]), ""), False
+    )
+    card = pc.fill_null(pc.struct_field(dv, ["cardinality"]), -1)
+    return {
+        "tableSizeBytes": pc.sum(t["size"]).as_py() or 0,
+        "numFiles": t.num_rows,
+        "numDeletedRecordsOpt": pc.sum(
+            pc.if_else(has_dv, card, 0)
+        ).as_py() or 0,
+        "numDeletionVectorsOpt": pc.sum(
+            pc.cast(has_dv, "int64")
+        ).as_py() or 0,
+    }
+
+
 def write_version_checksum(
     snapshot: Snapshot, spark=None, totals: dict | None = None
 ) -> str:
@@ -2580,14 +2603,8 @@ def write_version_checksum(
     numFiles/sizeInBytes). Overwrite-safe: the content is a pure
     function of the version's state."""
     fs = fs_for(snapshot.table_path, spark)
-    dvs = [f.dv for f in snapshot.files if f.dv is not None]
     if totals is None:
-        totals = {
-            "tableSizeBytes": sum(f.size for f in snapshot.files),
-            "numFiles": len(snapshot.files),
-            "numDeletedRecordsOpt": sum(d.cardinality for d in dvs),
-            "numDeletionVectorsOpt": len(dvs),
-        }
+        totals = _state_totals(snapshot)
     body = {
         "tableSizeBytes": totals["tableSizeBytes"],
         "numFiles": totals["numFiles"],
@@ -2647,10 +2664,8 @@ def verify_version_checksum(snapshot: Snapshot, spark=None) -> bool:
     if not fs.exists(path):
         return False
     crc = json.loads(fs.read_bytes(path))
-    actual = {
-        "numFiles": len(snapshot.files),
-        "tableSizeBytes": sum(f.size for f in snapshot.files),
-    }
+    totals = _state_totals(snapshot)
+    actual = {k: totals[k] for k in ("numFiles", "tableSizeBytes")}
     problems = [
         f"{k}: crc={crc.get(k)!r} snapshot={v!r}"
         for k, v in actual.items()

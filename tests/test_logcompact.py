@@ -34,14 +34,14 @@ from deltalake_datafusion_spark.delta.writer import (
 @pytest.fixture
 def counters(monkeypatch):
     c = {"commits": 0, "paths": []}
-    orig = snapmod._iter_commit_actions
+    orig = snapmod._read_commit_file
 
     def count(path, fs, with_files=True):
         c["commits"] += 1
         c["paths"].append(os.path.basename(path))
         return orig(path, fs, with_files)
 
-    monkeypatch.setattr(snapmod, "_iter_commit_actions", count)
+    monkeypatch.setattr(snapmod, "_read_commit_file", count)
     return c
 
 
@@ -305,10 +305,14 @@ def test_reconcile_equivalent_to_sequential_replay(commits):
     }}
 
     def replay(action_lists):
-        state = snapmod._ReplayState()
+        # each action list is one JSON log file through the replay path
+        state = snapmod._Replay()
         for actions in action_lists:
-            snapmod._apply_actions(actions, state, True)
-        return state
+            raw = "\n".join(json.dumps(a) for a in actions).encode()
+            state.apply(snapmod._parse_commit_bytes(raw))
+        snap = state.finish("t", 0)
+        snap.adds = {f.path: f for f in snap.files}
+        return snap
 
     seq = replay([[base_meta]] + commits)
     rec = replay([[base_meta], reconcile_actions(commits)])

@@ -97,6 +97,7 @@ def synthesize_log(path: str, n_files: int, commits: int = 32) -> None:
 
 def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [100_000, 300_000]
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     from deltalake_datafusion_spark.delta.scan import (
@@ -146,7 +147,9 @@ def main() -> None:
             # WITHOUT the file list + one Spark planning job
             t0 = time.time()
             snap_nf = load_snapshot(d, spark=spark, with_files=False)
-            cands_spark = collect_planned_files(spark, d, pred)
+            cands_spark = collect_planned_files(
+                spark, d, pred, meta_snapshot=snap_nf
+            )
             t_dml = time.time() - t0
             assert snap_nf.version == snap.version
             assert {f.path for f in cands_driver} == {
@@ -159,7 +162,11 @@ def main() -> None:
             threshold = 128 * 1024 * 1024
             t0 = time.time()
             snap = load_snapshot(d, spark=spark)
-            vict_driver = [f for f in snap.files if f.size < threshold]
+            # the driver OPTIMIZE victim condition (ops.optimize_delta):
+            # a filter over the file table's size column
+            vict_driver = list(snap.files.filter(
+                pc.less(snap.files.table["size"], threshold)
+            ))
             t_driver = time.time() - t0
             t0 = time.time()
             vict_spark = collect_planned_files(
