@@ -340,38 +340,26 @@ def _nested(path: list[str], typ: pa.DataType) -> pa.DataType:
     return typ
 
 
+# files per stats-parse slice: bounds the transient join/parse buffers
+_STATS_SLICE = 1 << 15
+
+
 def parse_stats_columns(stats, schema: pa.Schema, fallback) -> list:
     """Parse every file's stats JSON once with ``pyarrow.json`` against
     ``schema`` (unlisted fields ignored) and return its flattened leaf
     columns. When the typed parse fails — malformed stats, a value of
     another JSON type — every file is parsed with ``json.loads`` and
     ``fallback(stats_dict)`` returns the leaf values per file."""
-    import pyarrow.json as pj
-
-    stats = stats.combine_chunks() if isinstance(stats, pa.ChunkedArray) else stats
-    n = len(stats)
-    filled = pc.if_else(
-        pc.fill_null(pc.equal(stats, ""), True), "{}", stats
-    )
-    lines = pc.binary_join_element_wise(filled, "\n", "")
     try:
-        import numpy as np
-
-        # the joined lines are one contiguous run of the data buffer
-        off = np.frombuffer(lines.buffers()[1], np.int32)
-        start, end = int(off[lines.offset]), int(off[lines.offset + n])
-        buf = lines.buffers()[2].slice(start, end - start) if n else None
-        parsed = pj.read_json(
-            pa.BufferReader(buf),
-            parse_options=pj.ParseOptions(
-                explicit_schema=schema, unexpected_field_behavior="ignore"
-            ),
-        ) if n else schema.empty_table()
-        if parsed.num_rows != n:
-            raise pa.ArrowInvalid("stats row count mismatch")
-        while any(pa.types.is_struct(t) for t in parsed.schema.types):
-            parsed = parsed.flatten()
-        return [c.combine_chunks() for c in parsed.columns]
+        parts = [
+            _parse_stats_slice(stats.slice(i, _STATS_SLICE), schema)
+            for i in range(0, len(stats), _STATS_SLICE)
+        ]
+        if not parts:
+            return [pa.array([], f.type) for f in _leaves(schema)]
+        return [
+            pa.concat_arrays([p[k] for p in parts]) for k in range(len(parts[0]))
+        ]
     except pa.ArrowInvalid:
         from deltalake_datafusion_spark.delta.stats import parse_stats
 
@@ -379,11 +367,35 @@ def parse_stats_columns(stats, schema: pa.Schema, fallback) -> list:
         for s in stats.to_pylist():
             st = parse_stats(s)
             rows.append(fallback(st if isinstance(st, dict) else {}))
-        leaves = _leaves(schema)
         return [
             pa.array([r[i] for r in rows], f.type)
-            for i, f in enumerate(leaves)
+            for i, f in enumerate(_leaves(schema))
         ]
+
+
+def _parse_stats_slice(stats, schema: pa.Schema) -> list:
+    import numpy as np
+    import pyarrow.json as pj
+
+    if isinstance(stats, pa.ChunkedArray):
+        stats = stats.combine_chunks()
+    n = len(stats)
+    filled = pc.if_else(pc.fill_null(pc.equal(stats, ""), True), "{}", stats)
+    lines = pc.binary_join_element_wise(filled, "\n", "")
+    # the joined lines are one contiguous run of the data buffer
+    off = np.frombuffer(lines.buffers()[1], np.int32)
+    start, end = int(off[lines.offset]), int(off[lines.offset + n])
+    parsed = pj.read_json(
+        pa.BufferReader(lines.buffers()[2].slice(start, end - start)),
+        parse_options=pj.ParseOptions(
+            explicit_schema=schema, unexpected_field_behavior="ignore"
+        ),
+    )
+    if parsed.num_rows != n:
+        raise pa.ArrowInvalid("stats row count mismatch")
+    while any(pa.types.is_struct(t) for t in parsed.schema.types):
+        parsed = parsed.flatten()
+    return [c.combine_chunks() for c in parsed.columns]
 
 
 def _leaves(schema: pa.Schema) -> list[pa.Field]:

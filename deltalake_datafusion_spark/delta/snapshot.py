@@ -690,12 +690,13 @@ class _Replay:
         )
         last = acts.group_by("path", use_threads=False).aggregate(
             [("i", "max")]
-        )
-        # every path acted on once (an append-only log): nothing to drop
-        won = acts if last.num_rows == acts.num_rows else acts.take(
-            last["i_max"]
-        )
-        won = won.filter(won["is_add"]).select(FILE_SCHEMA.names)
+        )["i_max"]
+        if len(last) == acts.num_rows and pc.all(acts["is_add"]).as_py():
+            won = acts  # an append-only log: every action is a live add
+        else:
+            # one copy: the winning actions that are adds
+            won = acts.take(last.filter(pc.take(acts["is_add"], last)))
+        won = won.select(FILE_SCHEMA.names)
         if live is None or live.num_rows == 0:
             return won
         touched = pc.is_in(live["path"], value_set=acts["path"])
