@@ -675,7 +675,9 @@ class _Replay:
         """Live-file table after every collected action: last action
         per path wins (hash group-by over the actions in replay
         order); live rows whose path any action touched are
-        superseded."""
+        superseded. Rows are dropped batch by batch, so only batches
+        that lose rows are copied."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -685,22 +687,20 @@ class _Replay:
         if not self.actions:
             return live
         acts = pa.concat_tables(self.actions)
-        acts = acts.append_column(
-            "i", pa.array(range(acts.num_rows), pa.int64())
-        )
-        last = acts.group_by("path", use_threads=False).aggregate(
-            [("i", "max")]
-        )["i_max"]
-        if len(last) == acts.num_rows and pc.all(acts["is_add"]).as_py():
-            won = acts  # an append-only log: every action is a live add
-        else:
-            # one copy: the winning actions that are adds
-            won = acts.take(last.filter(pc.take(acts["is_add"], last)))
-        won = won.select(FILE_SCHEMA.names)
+        n = acts.num_rows
+        last = pa.table({
+            "path": acts["path"], "i": pa.array(np.arange(n, dtype=np.int64)),
+        }).group_by("path", use_threads=False).aggregate([("i", "max")])
+        keep = np.zeros(n, dtype=bool)
+        keep[last["i_max"].to_numpy()] = True
+        keep &= acts["is_add"].to_numpy()
+        won = _keep_rows(acts.select(FILE_SCHEMA.names), keep)
         if live is None or live.num_rows == 0:
             return won
         touched = pc.is_in(live["path"], value_set=acts["path"])
-        return pa.concat_tables([live.filter(pc.invert(touched)), won])
+        return pa.concat_tables([
+            _keep_rows(live, ~touched.to_numpy(zero_copy_only=False)), won,
+        ])
 
     def finish(self, table_path: str, version: int) -> Snapshot:
         from deltalake_datafusion_spark.delta.filetable import FileView
@@ -720,6 +720,22 @@ class _Replay:
             app_transactions=self.app_transactions,
             domain_metadata=self.domain_metadata,
         )
+
+
+def _keep_rows(table, keep):
+    """``table`` filtered by the numpy bool mask ``keep``, batch by
+    batch: whole batches are kept or dropped without a copy."""
+    import pyarrow as pa
+
+    out, off = [], 0
+    for b in table.to_batches():
+        m = keep[off:off + b.num_rows]
+        off += b.num_rows
+        if m.all():
+            out.append(b)
+        elif m.any():
+            out.append(b.filter(pa.array(m)))
+    return pa.Table.from_batches(out, schema=table.schema)
 
 
 def load_snapshot(
