@@ -14,8 +14,8 @@ Arrow on the driver:
    metaData / protocol / txn / domainMetadata actions become dicts;
    add/remove actions stay Arrow columns;
 3. replay: latest metaData/protocol win; file actions are reconciled
-   by path in one vectorized last-action-wins pass (hash group-by over
-   the actions in log order), so the live-file set is an Arrow table
+   by path in one vectorized last-action-wins pass over the actions in
+   log order, so the live-file set is an Arrow table
    (``filetable.FILE_SCHEMA``). ``Snapshot.files`` is a read-only
    sequence view over it: ``len()`` is O(1) and ``AddFile`` objects
    are built only for the files a caller iterates.
@@ -673,8 +673,8 @@ class _Replay:
 
     def _reconcile(self):
         """Live-file table after every collected action: last action
-        per path wins (hash group-by over the actions in replay
-        order); live rows whose path any action touched are
+        per path wins (paths dictionary-encoded, last occurrence per
+        code); live rows whose path any action touched are
         superseded. Rows are dropped batch by batch, so only batches
         that lose rows are copied."""
         import numpy as np
@@ -688,11 +688,13 @@ class _Replay:
             return live
         acts = pa.concat_tables(self.actions)
         n = acts.num_rows
-        last = pa.table({
-            "path": acts["path"], "i": pa.array(np.arange(n, dtype=np.int64)),
-        }).group_by("path", use_threads=False).aggregate([("i", "max")])
+        codes = pc.dictionary_encode(
+            acts["path"].combine_chunks()
+        ).indices.to_numpy()
+        # first occurrence in reverse order = last action per path
+        _, first_rev = np.unique(codes[::-1], return_index=True)
         keep = np.zeros(n, dtype=bool)
-        keep[last["i_max"].to_numpy()] = True
+        keep[n - 1 - first_rev] = True
         keep &= acts["is_add"].to_numpy()
         won = _keep_rows(acts.select(FILE_SCHEMA.names), keep)
         if live is None or live.num_rows == 0:
