@@ -129,7 +129,7 @@ def _conform(arr, typ: pa.DataType):
 
 def file_rows(add, part_keys=frozenset()) -> pa.Table:
     """Normalize an add-action struct column (from commit JSON or a
-    checkpoint) whose rows are all valid into a FILE_SCHEMA table.
+    checkpoint) into a FILE_SCHEMA table (null rows stay null).
     Typed ``stats_parsed`` (checkpoints written with stats as a
     struct) is folded into the JSON ``stats`` string where the string
     is missing — the one stats format the skipping code reads."""

@@ -244,9 +244,10 @@ def _check_protocol(protocol: Protocol) -> None:
 class _LogBatch:
     """One log file (commit JSON, compacted JSON or checkpoint),
     parsed: its metaData/protocol/txn/domainMetadata actions as dicts
-    in file order, and its add/remove actions as one Arrow table
-    (``add`` and ``remove`` struct columns, one row per file action,
-    in file order) — None when the file actions were not read."""
+    in file order, and its actions as Arrow tables with ``add`` and
+    ``remove`` struct columns (one row per action, in file order; rows
+    of other actions hold two nulls) — None when the file actions
+    were not read."""
 
     __slots__ = ("meta", "file_actions")
 
@@ -301,8 +302,7 @@ def _read_checkpoint_actions(
                 if c not in names:
                     typ = _file_action_schema().field(c).type
                     ft = ft.append_column(c, pa.nulls(ft.num_rows, typ))
-            valid = pc.or_(ft["add"].is_valid(), ft["remove"].is_valid())
-            file_tables.append(ft.filter(valid).select(["add", "remove"]))
+            file_tables.append(ft.select(["add", "remove"]))
 
     for p in checkpoint_paths:
         if with_files:
@@ -404,11 +404,7 @@ def _parse_commit_bytes(raw: bytes, with_files: bool = True) -> _LogBatch:
             any_set = pc.or_(any_set, sub[c].is_valid())
         for row in sub.filter(any_set).to_pylist():
             meta.append(_drop_nulls(row))
-    files = t.select(["add", "remove"])
-    files = files.filter(
-        pc.or_(files["add"].is_valid(), files["remove"].is_valid())
-    )
-    return _LogBatch(meta, [files])
+    return _LogBatch(meta, [t.select(["add", "remove"])])
 
 
 def _drop_nulls(v):
@@ -598,11 +594,13 @@ class _Replay:
         return frozenset(keys)
 
     def _file_actions(self, raw):
+        """A log file's add/remove rows (in file order) as FILE_SCHEMA
+        + ``is_add``: removes carry only their path. Rows holding
+        neither action are dropped."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from deltalake_datafusion_spark.delta.filetable import (
-            FILE_SCHEMA,
             decode_paths,
             file_rows,
         )
@@ -610,28 +608,17 @@ class _Replay:
         add = raw["add"].combine_chunks()
         rm = raw["remove"].combine_chunks()
         is_add = add.is_valid()
-        adds = file_rows(add.filter(is_add), self._partition_keys())
-        removed = rm.filter(pc.invert(is_add))
-        if len(removed):
-            self.tombstone_arrays.append(removed)
-        rm_paths = decode_paths(pc.struct_field(removed, ["path"]))
-        removes = pa.Table.from_arrays(
-            [rm_paths] + [
-                pa.nulls(len(removed), f.type) for f in FILE_SCHEMA
-                if f.name != "path"
-            ],
-            schema=FILE_SCHEMA,
-        )
-        # restore file order: adds and removes interleave by line
-        pos = pa.concat_arrays([
-            pc.indices_nonzero(is_add),
-            pc.indices_nonzero(pc.invert(is_add)),
-        ])
-        t = pa.concat_tables([adds, removes]).append_column(
-            "is_add",
-            pa.array([True] * adds.num_rows + [False] * removes.num_rows),
-        )
-        return t.take(pc.sort_indices(pos)) if removes.num_rows else t
+        is_rm = pc.and_(rm.is_valid(), pc.invert(is_add))
+        t = file_rows(add, self._partition_keys())
+        if pc.any(is_rm).as_py():
+            self.tombstone_arrays.append(rm.filter(is_rm))
+            t = t.set_column(0, "path", pc.coalesce(
+                t["path"], decode_paths(pc.struct_field(rm, ["path"]))
+            ))
+        t = t.append_column("is_add", is_add)
+        return _keep_rows(t, pc.or_(is_add, is_rm).to_numpy(
+            zero_copy_only=False
+        ))
 
     def _apply_meta(self, a: dict) -> None:
         if a.get("metaData"):
