@@ -55,10 +55,6 @@ LOG_TO_FILE = {
 }
 
 
-def empty_file_table() -> pa.Table:
-    return FILE_SCHEMA.empty_table()
-
-
 def decode_paths(paths: pa.Array) -> pa.Array:
     """URL-decode log paths; only the (rare) paths holding ``%`` pay a
     Python ``unquote``."""
@@ -237,7 +233,7 @@ class FileView(Sequence):
     __slots__ = ("table", "_files", "_stats")
 
     def __init__(self, table: pa.Table | None = None):
-        self.table = empty_file_table() if table is None else table
+        self.table = FILE_SCHEMA.empty_table() if table is None else table
         self._files: list | None = None
         self._stats: dict = {}
 
@@ -280,22 +276,16 @@ class FileView(Sequence):
 
     def num_records(self) -> pa.Array:
         """numRecords per file (null where stats are missing)."""
-        if "numRecords" not in self._stats:
-            self._stats["numRecords"] = parse_stats_columns(
-                self.table["stats"], pa.schema([("numRecords", pa.int64())]),
-                lambda st: [_int_or_none(st.get("numRecords"))],
-            )[0]
-        return self._stats["numRecords"]
+        return self.stats_bounds(None, None)[3]
 
-    def stats_bounds(self, phys: str, dtype):
+    def stats_bounds(self, phys: str | None, dtype):
         """(min, max, nullCount, numRecords) arrays for physical
-        column ``phys`` (dotted for nested), typed per
-        :func:`stats_arrow_type` (min/max all-null when the type has
-        no skipping domain)."""
-        key = ("bounds", phys)
-        if key not in self._stats:
-            self._stats[key] = _parse_bounds(self.table["stats"], phys, dtype)
-        return self._stats[key]
+        column ``phys`` (dotted for nested; None → numRecords only),
+        min/max typed per :func:`stats_arrow_type` (all-null when the
+        type has no skipping domain)."""
+        if phys not in self._stats:
+            self._stats[phys] = _parse_bounds(self.table["stats"], phys, dtype)
+        return self._stats[phys]
 
 
 # ------------------------------------------------------------ stats
@@ -344,36 +334,80 @@ def _nested(path: list[str], typ: pa.DataType) -> pa.DataType:
 _STATS_SLICE = 1 << 15
 
 
-def parse_stats_columns(stats, schema: pa.Schema, fallback) -> list:
-    """Parse every file's stats JSON once with ``pyarrow.json`` against
-    ``schema`` (unlisted fields ignored) and return its flattened leaf
-    columns. When the typed parse fails — malformed stats, a value of
-    another JSON type — every file is parsed with ``json.loads`` and
-    ``fallback(stats_dict)`` returns the leaf values per file."""
+def _parse_bounds(stats, phys: str | None, dtype):
+    """Every file's stats JSON parsed once with ``pyarrow.json``
+    against a schema holding only ``phys``'s leaves. When the typed
+    parse fails — malformed stats, a value of another JSON type — each
+    file is parsed with ``json.loads`` instead (:func:`_bounds_rows`)."""
+    if not len(stats):
+        return _bounds_rows(stats, phys, dtype, None)
+    typ = stats_arrow_type(dtype) if phys is not None else None
+    fields = [("numRecords", pa.int64())]
+    if phys is not None:
+        path = phys.split(".")
+        # dates and timestamps travel as strings in stats JSON
+        json_typ = (
+            pa.string() if typ is not None
+            and (pa.types.is_date(typ) or pa.types.is_timestamp(typ)) else typ
+        )
+        if typ is not None:
+            fields += [
+                (k, pa.struct([(path[0], _nested(path, json_typ))]))
+                for k in ("minValues", "maxValues")
+            ]
+        fields.append(
+            ("nullCount", pa.struct([(path[0], _nested(path, pa.int64()))]))
+        )
+    schema = pa.schema(fields)
     try:
         parts = [
             _parse_stats_slice(stats.slice(i, _STATS_SLICE), schema)
             for i in range(0, len(stats), _STATS_SLICE)
         ]
-        if not parts:
-            return [pa.array([], f.type) for f in _leaves(schema)]
-        return [
-            pa.concat_arrays([p[k] for p in parts]) for k in range(len(parts[0]))
-        ]
     except pa.ArrowInvalid:
-        from deltalake_datafusion_spark.delta.stats import parse_stats
+        return _bounds_rows(stats, phys, dtype, typ)
+    cols = [pa.concat_arrays(list(c)) for c in zip(*parts)]
+    nrec = cols[0]
+    none = pa.nulls(len(nrec), pa.null())
+    if phys is None:
+        return none, none, none, nrec
+    if typ is None:
+        return none, none, cols[-1], nrec
+    mn, mx = (to_domain(c, typ, dtype) for c in cols[1:3])
+    return mn, mx, cols[-1], nrec
 
-        rows = []
-        for s in stats.to_pylist():
-            st = parse_stats(s)
-            rows.append(fallback(st if isinstance(st, dict) else {}))
-        return [
-            pa.array([r[i] for r in rows], f.type)
-            for i, f in enumerate(_leaves(schema))
-        ]
+
+def _bounds_rows(stats, phys, dtype, typ):
+    """Fallback of :func:`_parse_bounds`: ``json.loads`` per file, and
+    min/max through ``_coerce`` — the reference evaluator's own
+    conversion — into the same Arrow types."""
+    from deltalake_datafusion_spark.delta.predicates import _coerce, _lookup
+    from deltalake_datafusion_spark.delta.stats import parse_stats
+
+    rows = [parse_stats(s) for s in stats.to_pylist()]
+    rows = [r if isinstance(r, dict) else {} for r in rows]
+    nrec = pa.array([_int_or_none(r.get("numRecords")) for r in rows], pa.int64())
+    none = pa.nulls(len(rows), pa.null())
+    if phys is None:
+        return none, none, none, nrec
+    nulls = pa.array(
+        [_int_or_none(_lookup(r.get("nullCount"), phys)) for r in rows],
+        pa.int64(),
+    )
+    if typ is None:
+        return none, none, nulls, nrec
+    mn, mx = (
+        pa.array([
+            _domain_value(_coerce(_lookup(r.get(k), phys), dtype), typ)
+            for r in rows
+        ], typ)
+        for k in ("minValues", "maxValues")
+    )
+    return mn, mx, nulls, nrec
 
 
 def _parse_stats_slice(stats, schema: pa.Schema) -> list:
+    """One slice of stats strings → the schema's flattened leaf arrays."""
     import numpy as np
     import pyarrow.json as pj
 
@@ -396,81 +430,6 @@ def _parse_stats_slice(stats, schema: pa.Schema) -> list:
     while any(pa.types.is_struct(t) for t in parsed.schema.types):
         parsed = parsed.flatten()
     return [c.combine_chunks() for c in parsed.columns]
-
-
-def _leaves(schema: pa.Schema) -> list[pa.Field]:
-    out = []
-
-    def walk(f):
-        if pa.types.is_struct(f.type):
-            for c in f.type:
-                walk(c)
-        else:
-            out.append(f)
-
-    for f in schema:
-        walk(f)
-    return out
-
-
-def _parse_bounds(stats, phys: str, dtype):
-    from deltalake_datafusion_spark.delta.predicates import _lookup
-
-    typ = stats_arrow_type(dtype)
-    path = phys.split(".")
-    # dates and timestamps travel as strings in stats JSON
-    json_typ = (
-        pa.string() if typ is not None
-        and (pa.types.is_date(typ) or pa.types.is_timestamp(typ)) else typ
-    )
-    fields = [("numRecords", pa.int64())]
-    if typ is not None:
-        fields += [
-            ("minValues", pa.struct([(path[0], _nested(path, json_typ))])),
-            ("maxValues", pa.struct([(path[0], _nested(path, json_typ))])),
-        ]
-    fields.append(
-        ("nullCount", pa.struct([(path[0], _nested(path, pa.int64()))]))
-    )
-
-    def fallback(st):
-        vals = [_int_or_none(st.get("numRecords"))]
-        if typ is not None:
-            vals += [
-                _lookup(st.get("minValues"), phys),
-                _lookup(st.get("maxValues"), phys),
-            ]
-        return vals + [_int_or_none(_lookup(st.get("nullCount"), phys))]
-
-    leaves = parse_stats_columns(
-        stats, pa.schema(fields),
-        lambda st: _fallback_typed(fallback(st), typ, dtype),
-    )
-    nrec, nulls = leaves[0], leaves[-1]
-    if typ is None:
-        empty = pa.nulls(len(nrec), pa.null())
-        return empty, empty, nulls, nrec
-    mn, mx = (to_domain(c, typ, dtype) for c in leaves[1:3])
-    return mn, mx, nulls, nrec
-
-
-def _fallback_typed(vals, typ, dtype):
-    """Fallback leaf values: min/max through ``_coerce`` so they land
-    in the same domain (and Arrow type) the typed parse produces."""
-    if typ is None:
-        return vals
-    from deltalake_datafusion_spark.delta.predicates import _coerce
-
-    mn, mx = (_domain_value(_coerce(v, dtype), typ) for v in vals[1:3])
-    return [vals[0], _json_form(mn, typ), _json_form(mx, typ), vals[3]]
-
-
-def _json_form(v, typ):
-    # dates/timestamps go back to ISO text so the fallback column has
-    # the same (string) type the typed parse produces
-    if v is None or not (pa.types.is_date(typ) or pa.types.is_timestamp(typ)):
-        return v
-    return v.isoformat(sep=" ") if pa.types.is_timestamp(typ) else v.isoformat()
 
 
 def _domain_value(v, typ):

@@ -272,7 +272,6 @@ def _read_checkpoint_actions(
     million-file checkpoint costs the driver only its metadata rows.
     """
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
     meta: list[dict] = []
@@ -281,15 +280,7 @@ def _read_checkpoint_actions(
 
     def take(table):
         names = set(table.column_names)
-        meta_cols = [c for c in _META_KEYS if c in names]
-        if meta_cols:
-            sub = table.select(meta_cols)
-            any_set = None
-            for c in meta_cols:
-                v = sub[c].is_valid()
-                any_set = v if any_set is None else pc.or_(any_set, v)
-            for row in sub.filter(any_set).to_pylist():
-                meta.append({k: v for k, v in row.items() if v is not None})
+        meta.extend(_meta_rows(table))
         if "sidecar" in names:
             # V2 checkpoint: file actions live in _sidecars/
             sidecars.extend(
@@ -379,7 +370,6 @@ def _parse_commit_bytes(raw: bytes, with_files: bool = True) -> _LogBatch:
     line instead. Without files, only the lines that can hold a
     non-file action are parsed."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.json as pj
 
     if not with_files:
@@ -395,20 +385,26 @@ def _parse_commit_bytes(raw: bytes, with_files: bool = True) -> _LogBatch:
         )
     except pa.ArrowInvalid:
         return _parse_commit_lines(raw)
-    meta_cols = [c for c in _META_KEYS if c in t.column_names]
-    meta = []
-    if meta_cols:
-        sub = t.select(meta_cols)
-        any_set = sub[meta_cols[0]].is_valid()
-        for c in meta_cols[1:]:
-            any_set = pc.or_(any_set, sub[c].is_valid())
-        for row in sub.filter(any_set).to_pylist():
-            meta.append(_drop_nulls(row))
-    return _LogBatch(meta, [t.select(["add", "remove"])])
+    return _LogBatch(_meta_rows(t), [t.select(["add", "remove"])])
+
+
+def _meta_rows(table) -> list[dict]:
+    """The rows of a parsed log file holding a metaData, protocol, txn
+    or domainMetadata action, as action dicts in file order."""
+    import pyarrow.compute as pc
+
+    cols = [c for c in _META_KEYS if c in table.column_names]
+    if not cols:
+        return []
+    sub = table.select(cols)
+    any_set = sub[cols[0]].is_valid()
+    for c in cols[1:]:
+        any_set = pc.or_(any_set, sub[c].is_valid())
+    return [_drop_nulls(row) for row in sub.filter(any_set).to_pylist()]
 
 
 def _drop_nulls(v):
-    """Inferred struct rows carry every key seen in the file; drop the
+    """Struct rows carry every field of their column's type; drop the
     null ones so a row reads like the JSON object it came from."""
     if isinstance(v, dict):
         return {k: _drop_nulls(x) for k, x in v.items() if x is not None}
