@@ -421,6 +421,8 @@ def _parse_stats_slice(stats, schema: pa.Schema) -> list:
     start, end = int(off[lines.offset]), int(off[lines.offset + n])
     parsed = pj.read_json(
         pa.BufferReader(lines.buffers()[2].slice(start, end - start)),
+        # threads only pay off past one default (1 MiB) block
+        read_options=pj.ReadOptions(use_threads=end - start > 1 << 20),
         parse_options=pj.ParseOptions(
             explicit_schema=schema, unexpected_field_behavior="ignore"
         ),

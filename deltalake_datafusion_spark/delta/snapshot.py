@@ -315,7 +315,8 @@ _META_ACTION_MARKS = tuple(f'"{k}"' for k in _META_KEYS)
 def _iter_commit_actions(path: str, fs, with_files: bool = True) -> list[dict]:
     """Every action of one commit file as a dict (CDF, streaming,
     clone, log compaction and the writer's conflict check read commits
-    action by action; snapshot replay uses :func:`_read_commit_file`)."""
+    action by action; snapshot replay parses whole files in Arrow,
+    :func:`_replay_commit_files`)."""
     return _actions_of(fs.read_bytes(path), with_files)
 
 
@@ -362,7 +363,7 @@ def _parse_commit_bytes(raw: bytes, with_files: bool = True) -> _LogBatch:
     """One JSON log file's bytes → :class:`_LogBatch`.
 
     ``with_files`` → ONE ``pyarrow.json`` pass (multi-threaded over
-    256 KiB blocks): the explicit schema pins the typed add/remove
+    256 KiB blocks when there is more than one): the explicit schema pins the typed add/remove
     fields, everything else — ``partitionValues``/``tags`` and the
     metaData/protocol/txn/domainMetadata actions — is inferred, and
     only the few non-file rows become dicts. A file the Arrow reader
@@ -377,7 +378,9 @@ def _parse_commit_bytes(raw: bytes, with_files: bool = True) -> _LogBatch:
     try:
         t = pj.read_json(
             pa.BufferReader(raw),
-            read_options=pj.ReadOptions(block_size=1 << 18),
+            read_options=pj.ReadOptions(
+                block_size=1 << 18, use_threads=len(raw) > 1 << 18
+            ),
             parse_options=pj.ParseOptions(
                 explicit_schema=_file_action_schema(),
                 unexpected_field_behavior="infer",
@@ -450,10 +453,30 @@ def _parse_commit_lines(raw: bytes) -> _LogBatch:
     return _LogBatch(meta, [files])
 
 
-def _read_commit_file(path: str, fs, with_files: bool = True) -> _LogBatch:
-    """One JSON log file (commit or compacted range) → :class:`_LogBatch`.
-    ``with_files=False`` skips the add/remove actions entirely."""
-    return _parse_commit_bytes(fs.read_bytes(path), with_files)
+def _read_commit_file(path: str, fs) -> bytes:
+    """The bytes of one JSON log file (commit or compacted range)."""
+    return fs.read_bytes(path)
+
+
+# JSON log files are parsed in runs of about this many bytes: one
+# Arrow parse per run amortizes the per-call cost over small commits,
+# while large commits still parse one file at a time
+_PARSE_RUN_BYTES = 1 << 20
+
+
+def _replay_commit_files(replay, paths: list[str], fs, with_files: bool):
+    """Read ``paths`` in order and apply them to ``replay``."""
+    run: list[bytes] = []
+    size = 0
+    for p in paths:
+        raw = _read_commit_file(p, fs)
+        run.append(raw)
+        size += len(raw)
+        if size >= _PARSE_RUN_BYTES:
+            replay.apply(_parse_commit_bytes(b"\n".join(run), with_files))
+            run, size = [], 0
+    if run:
+        replay.apply(_parse_commit_bytes(b"\n".join(run), with_files))
 
 
 def _commit_timestamp(path: str, fs) -> int | None:
@@ -789,8 +812,7 @@ def load_snapshot(
         if not tail:
             return base
         replay = _Replay(base)
-        for _v, p in tail:
-            replay.apply(_read_commit_file(p, fs, with_files))
+        _replay_commit_files(replay, [p for _v, p in tail], fs, with_files)
         return replay.finish(table_path, tail[-1][0])
 
     # Choose a checkpoint ≤ requested version, then replay commits after it.
@@ -826,13 +848,15 @@ def load_snapshot(
     replay = _Replay()
     if cp_paths:
         replay.apply(_read_checkpoint_actions(cp_paths, with_files))
-    actual_version = cp_version
-    for _kind, _s, seg_end, p in _plan_commit_replay(
+    segments = _plan_commit_replay(
         replay_commits, compacted, cp_version, version
-    ):
-        replay.apply(_read_commit_file(p, fs, with_files))
-        actual_version = seg_end
-    return replay.finish(table_path, actual_version)
+    )
+    _replay_commit_files(
+        replay, [p for _k, _s, _e, p in segments], fs, with_files
+    )
+    return replay.finish(
+        table_path, segments[-1][2] if segments else cp_version
+    )
 
 
 def _plan_commit_replay(

@@ -36,10 +36,10 @@ def counters(monkeypatch):
     c = {"commits": 0, "paths": []}
     orig = snapmod._read_commit_file
 
-    def count(path, fs, with_files=True):
+    def count(path, fs):
         c["commits"] += 1
         c["paths"].append(os.path.basename(path))
-        return orig(path, fs, with_files)
+        return orig(path, fs)
 
     monkeypatch.setattr(snapmod, "_read_commit_file", count)
     return c

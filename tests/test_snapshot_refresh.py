@@ -31,9 +31,9 @@ def counters(monkeypatch):
     orig_commit = snapmod._read_commit_file
     orig_cp = snapmod._read_checkpoint_actions
 
-    def count_commit(path, fs, with_files=True):
+    def count_commit(path, fs):
         counts["commits"] += 1
-        return orig_commit(path, fs, with_files)
+        return orig_commit(path, fs)
 
     def count_cp(paths, with_files=True):
         counts["checkpoints"] += len(paths)
