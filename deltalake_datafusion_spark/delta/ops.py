@@ -2494,7 +2494,7 @@ def _optimize_attempt(
         elif zorder_by:
             keep = None  # explicit ZORDER rewrites all in scope
         else:
-            keep = pc.less(t["size"], threshold)
+            keep = pc.less(pc.fill_null(t["size"], 0), threshold)
         victims = list(scope if keep is None else scope.filter(keep))
         scope_count = len(scope)
     if (purge or incremental_cluster) and not victims:

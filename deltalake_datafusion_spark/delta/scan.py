@@ -252,7 +252,7 @@ def scan_files_spark(
     # metadata-only replay: the whole point of this planner is that
     # the DRIVER never parses the add actions — schema / partition
     # columns / protocol are all it needs here
-    snap = meta_snapshot or load_snapshot(
+    snap = meta_snapshot if meta_snapshot is not None else load_snapshot(
         table_path, version=version, spark=spark, with_files=False
     )
     files_df = log_replay_df(spark, table_path, version)
