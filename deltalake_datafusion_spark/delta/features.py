@@ -387,33 +387,21 @@ def drop_feature(
         if protect:
             # the protected checkpoint: tip readers replay from here,
             # never from the commits that used the dropped feature.
-            # Same planner selection as the post-commit hook (driver
-            # loop below the threshold, executor-distributed above it
-            # — a 1e6-file table must not funnel its file list through
-            # a driver JSON loop), and skipped when a checkpoint for
-            # this exact version already exists (conflict retries land
-            # on a NEW snapshot version; the old attempt's checkpoint
-            # stays valid for ITS version).
+            # Skipped when a checkpoint for this exact version already
+            # exists (conflict retries land on a NEW snapshot version;
+            # the old attempt's checkpoint stays valid for ITS version).
             from deltalake_datafusion_spark.delta.snapshot import (
                 list_log_files,
             )
             from deltalake_datafusion_spark.delta.writer import (
-                DISTRIBUTED_CHECKPOINT_THRESHOLD,
                 write_checkpoint,
-                write_checkpoint_spark,
             )
 
-            _has_cp = any(
+            if not any(
                 v == snap.version
                 for v, _ in list_log_files(table_path, spark)[1]
-            )
-            if not _has_cp:
-                if len(snap.files) > DISTRIBUTED_CHECKPOINT_THRESHOLD:
-                    write_checkpoint_spark(
-                        spark, snap.table_path, snap.version
-                    )
-                else:
-                    write_checkpoint(spark, snap)
+            ):
+                write_checkpoint(spark, snap)
         if truncate_history:
             # checkpoint the CURRENT version, then expire everything
             # older than it — readers of the downgraded protocol can

@@ -133,6 +133,11 @@ LOG_SCHEMA = StructType(
     ]
 )
 
+# Checkpoint rows: every log action but commitInfo.
+CHECKPOINT_SCHEMA = StructType(
+    [f for f in LOG_SCHEMA.fields if f.name != "commitInfo"]
+)
+
 # V2 checkpoints (Delta spec "V2 Checkpoint Table Feature"): the
 # top-level UUID-named checkpoint carries a checkpointMetadata action
 # and optional sidecar pointers into _delta_log/_sidecars/.
@@ -153,7 +158,7 @@ CHECKPOINT_METADATA_SCHEMA = StructType(
 )
 
 CHECKPOINT_V2_SCHEMA = StructType(
-    [f for f in LOG_SCHEMA.fields if f.name != "commitInfo"]
+    CHECKPOINT_SCHEMA.fields
     + [
         StructField("sidecar", SIDECAR_SCHEMA),
         StructField("checkpointMetadata", CHECKPOINT_METADATA_SCHEMA),

@@ -20,6 +20,7 @@ no row matches (prune), None = unknown (keep).
 from __future__ import annotations
 
 import datetime as dt
+import operator
 import re
 from dataclasses import dataclass
 from typing import Any
@@ -785,16 +786,21 @@ def skipping_column(pred, schema: StructType, partition_columns,
             if refs is None or node.lit.value is None:
                 return None
             mn, mx, dtype = refs
-            lit = F.lit(node.lit.value).cast(dtype)
+            if _coerce(node.lit.value, dtype) is None:
+                return None
+
+            def cmp(side, op):
+                return _spark_cmp(side, op, node.lit.value, dtype)
+
             op = node.op
             if op == "=":
-                cond = (mn <= lit) & (mx >= lit)
+                cond = cmp(mn, "<=") & cmp(mx, ">=")
             elif op in ("<", "<="):
-                cond = mn < lit if op == "<" else mn <= lit
+                cond = cmp(mn, op)
             elif op in (">", ">="):
-                cond = mx > lit if op == ">" else mx >= lit
+                cond = cmp(mx, op)
             else:  # '!=' prunable only when min==max==lit; keep simple
-                cond = ~((mn == lit) & (mx == lit))
+                cond = ~(cmp(mn, "=") & cmp(mx, "="))
             return (
                 F.coalesce(cond, F.lit(True))
                 & not_all_null(node.col.name)
@@ -830,6 +836,32 @@ def skipping_column(pred, schema: StructType, partition_columns,
         return None  # Not / Unknown → no pruning
 
     return may(pred)
+
+
+_COL_OPS = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+            ">": operator.gt, ">=": operator.ge}
+
+
+def _spark_cmp(side, op: str, value, dtype):
+    """Spark ``Column`` for ``side <op> value`` in ``_coerce``'s
+    comparison domain of ``dtype`` (the driver's rule, :func:`_vcmp`):
+    integral columns compare exactly against a never-narrowed literal,
+    other numerics as doubles; other types cast the literal."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType
+
+    lit = _coerce(value, dtype)
+    if isinstance(dtype, IntegralType):
+        r = _int_cmp(op, lit)
+        if r is None:
+            return F.lit(None).cast("boolean")
+        op, k = r
+        if op is None:
+            return F.when(side.isNotNull(), F.lit(k))
+        return _COL_OPS[op](side, F.lit(k).cast("long"))
+    if isinstance(dtype, (NumericType, DecimalType)):
+        return _COL_OPS[op](side.cast(DoubleType()), F.lit(lit))
+    return _COL_OPS[op](side, F.lit(value).cast(dtype))
 
 
 def prune_files_df(files_df, predicate_sql: str | None, schema: StructType,
@@ -1049,46 +1081,61 @@ _OPS = {"=": "equal", "<": "less", "<=": "less_equal", ">": "greater",
         ">=": "greater_equal"}
 
 
+def _int_cmp(op: str, lit):
+    """An integral column's ``x <op> lit`` (``op`` one of = < <= > >=,
+    ``lit`` a ``_coerce`` result) with Python's exact comparison
+    result, as ``(op', k)`` meaning ``x <op'> k`` for an int64 ``k``,
+    or ``(None, b)`` meaning ``b`` for every non-null ``x``; None when
+    Python would raise TypeError (the evaluator's unknown). The
+    literal is never narrowed: ``x < 10.5`` is ``x <= 10``."""
+    import math
+
+    if isinstance(lit, float):
+        if math.isnan(lit):  # every comparison with NaN is False
+            return None, False
+        if math.isinf(lit):
+            # every int is below +inf and above -inf
+            return None, {
+                "=": False, "<": lit > 0, "<=": lit > 0,
+                ">": lit < 0, ">=": lit < 0,
+            }[op]
+        k = math.floor(lit)
+        if k != lit:  # non-integral: x < r ⟺ x <= k, x > r ⟺ x > k
+            if op == "=":
+                return None, False
+            op = {"<": "<=", "<=": "<=", ">": ">", ">=": ">"}[op]
+        lit = int(k)
+    if not isinstance(lit, int) or isinstance(lit, bool):
+        return None
+    if not -(2**63) <= lit < 2**63:
+        below = lit > 0  # every int64 is below a huge positive lit
+        return None, {
+            "=": False, "<": below, "<=": below,
+            ">": not below, ">=": not below,
+        }[op]
+    return op, lit
+
+
 def _vcmp(arr, op: str, lit):
     """``arr <op> lit`` element-wise with Python's comparison result
     (exact int-vs-float for integral columns), or None where Python
     would raise TypeError (the evaluator's unknown)."""
     import datetime as _dt
-    import math
 
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    fn = getattr(pc, _OPS[op])
     typ = arr.type
     if pa.types.is_null(typ):
         return pa.nulls(len(arr), pa.bool_())
     if pa.types.is_integer(typ):
-        if isinstance(lit, float):
-            if math.isnan(lit):  # every comparison with NaN is False
-                return _where_valid(arr, False)
-            if math.isinf(lit):
-                # every int is below +inf and above -inf
-                return _where_valid(arr, {
-                    "=": False, "<": lit > 0, "<=": lit > 0,
-                    ">": lit < 0, ">=": lit < 0,
-                }[op])
-            k = math.floor(lit)
-            if k != lit:  # non-integral: x < r ⟺ x <= k, x > r ⟺ x > k
-                if op == "=":
-                    return _where_valid(arr, False)
-                op = {"<": "<=", "<=": "<=", ">": ">", ">=": ">"}[op]
-                fn = getattr(pc, _OPS[op])
-            lit = int(k)
-        if not isinstance(lit, int) or isinstance(lit, bool):
+        r = _int_cmp(op, lit)
+        if r is None:
             return None
-        if not -(2**63) <= lit < 2**63:
-            below = lit > 0  # every int64 is below a huge positive lit
-            return _where_valid(arr, {
-                "=": False, "<": below, "<=": below,
-                ">": not below, ">=": not below,
-            }[op])
-        return fn(arr, pa.scalar(lit, pa.int64()))
+        op, k = r
+        if op is None:
+            return _where_valid(arr, k)
+        return getattr(pc, _OPS[op])(arr, pa.scalar(k, pa.int64()))
     if pa.types.is_timestamp(typ):
         if not isinstance(lit, _dt.datetime) or lit.tzinfo is not None:
             return None
@@ -1105,7 +1152,7 @@ def _vcmp(arr, op: str, lit):
     elif pa.types.is_boolean(typ):
         if not isinstance(lit, bool):
             return None
-    return fn(arr, pa.scalar(lit, typ))
+    return getattr(pc, _OPS[op])(arr, pa.scalar(lit, typ))
 
 
 def _where_valid(arr, value: bool):

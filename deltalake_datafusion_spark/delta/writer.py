@@ -2108,104 +2108,206 @@ def _dv_to_json(dv) -> dict:
 
 
 def write_checkpoint(spark, snapshot: Snapshot) -> str:
-    """Materialize the snapshot as ``N.checkpoint.parquet`` +
-    ``_last_checkpoint`` (read side: snapshot.load_snapshot)."""
-    from deltalake_datafusion_spark.delta.log_schema import LOG_SCHEMA
+    """Checkpoint ``snapshot`` from its Arrow file table (read side:
+    snapshot.load_snapshot). Returns the checkpoint file — the first
+    part of a multi-part checkpoint, the top-level file of a V2 one."""
+    return _write_checkpoint(
+        spark, snapshot, _file_table_adds(spark, snapshot), len(snapshot.files)
+    )[0]
 
-    rows: list[dict] = []
-    rows.append(
-        {
-            "protocol": {
-                "minReaderVersion": snapshot.protocol.min_reader_version,
-                "minWriterVersion": snapshot.protocol.min_writer_version,
-                "readerFeatures": snapshot.protocol.reader_features or None,
-                "writerFeatures": snapshot.protocol.writer_features or None,
-            }
-        }
+
+def write_checkpoint_spark(
+    spark, table_path: str, version: int | None = None, parts: int | None = None
+) -> list[str]:
+    """Checkpoint a table whose file list stays off the driver: only
+    metadata is replayed on the driver, and the live adds come from
+    the executor-side replay (``log_replay_df``). ``parts`` overrides
+    the part count. Returns the top-level checkpoint files."""
+    from deltalake_datafusion_spark.delta.snapshot import (
+        load_snapshot,
+        log_replay_df,
     )
-    rows.append(
-        {
-            "metaData": {
-                "id": snapshot.metadata.id,
-                "name": snapshot.metadata.name,
-                "description": snapshot.metadata.description,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snapshot.metadata.schema_string,
-                "partitionColumns": snapshot.metadata.partition_columns,
-                "configuration": snapshot.metadata.configuration,
-                "createdTime": snapshot.metadata.created_time,
-            }
-        }
+
+    snap = load_snapshot(
+        table_path, version=version, spark=spark, with_files=False
+    )
+    adds = log_replay_df(spark, snap.table_path, snap.version)
+    return _write_checkpoint(spark, snap, adds, adds.count(), parts)
+
+
+def _file_table_adds(spark, snapshot: Snapshot):
+    """The snapshot's Arrow file table as a DataFrame with
+    ``log_replay_df``'s add columns, paths URL-encoded as in the log."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from deltalake_datafusion_spark.delta.filetable import LOG_TO_FILE
+
+    t = snapshot.files.table
+    if not t.num_rows:  # pyspark cannot ship a column with no chunks
+        t = t.schema.empty_table()
+    path = t["path"].combine_chunks()
+    # only the paths holding a character ``quote`` escapes pay Python
+    enc = pc.fill_null(
+        pc.match_substring_regex(path, r"[^A-Za-z0-9_.~/-]"), False
+    )
+    if pc.any(enc).as_py():
+        path = pc.replace_with_mask(path, enc, pa.array(
+            [_url_encode_path(p) for p in path.filter(enc).to_pylist()],
+            pa.string(),
+        ))
+    t = t.set_column(t.schema.get_field_index("path"), "path", path)
+    return spark.createDataFrame(
+        t.select(list(LOG_TO_FILE.values())).rename_columns(list(LOG_TO_FILE))
+    )
+
+
+# adds per checkpoint part (classic part or V2 sidecar)
+_CHECKPOINT_PART_ROWS = 500_000
+
+
+def _write_checkpoint(
+    spark, snap: Snapshot, adds, n_adds: int, parts: int | None = None
+) -> list[str]:
+    """Write the checkpoint of ``snap`` whose live adds are ``adds`` —
+    a DataFrame with ``log_replay_df``'s columns, ``n_adds`` rows —
+    and point ``_last_checkpoint`` at it. The layout follows
+    ``delta.checkpointPolicy``: classic (``N.checkpoint.parquet``, or
+    ``N.checkpoint.<i>.<n>.parquet`` parts of ≤500k adds), or V2 (the
+    adds as UUID-named sidecars under ``_delta_log/_sidecars/``, and a
+    UUID-named ``N.checkpoint.<uuid>.parquet`` holding the metadata
+    rows, a ``checkpointMetadata`` action and one ``sidecar`` pointer
+    per part — concurrent checkpointers never clobber each other).
+    Returns the top-level checkpoint files."""
+    import math
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from deltalake_datafusion_spark.delta.log_schema import (
+        ADD_SCHEMA,
+        CHECKPOINT_SCHEMA,
+        CHECKPOINT_V2_SCHEMA,
+    )
+
+    live = adds.select(
+        F.struct(
+            "path", "partitionValues", "size", "modificationTime",
+            F.lit(False).alias("dataChange"), "stats",
+            F.when(F.size("tags") > 0, F.col("tags")).alias("tags"),
+            F.when(
+                F.col("deletionVector.storageType") != "",
+                F.col("deletionVector"),
+            ).alias("deletionVector"),
+            "baseRowId", "defaultRowCommitVersion",
+        ).cast(ADD_SCHEMA).alias("add")
     )
     # txn state must survive checkpointing (spec: checkpoints carry the
     # latest txn action per appId) — COPY INTO's per-file ledger and
     # streaming-sink idempotence depend on it once cleanup_expired_logs
     # deletes the superseded commit JSONs.
-    for app_id in sorted(snapshot.app_transactions):
-        rows.append(
-            {"txn": {"appId": app_id,
-                     "version": snapshot.app_transactions[app_id]}}
-        )
-    for domain in sorted(snapshot.domain_metadata):
-        rows.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": snapshot.domain_metadata[domain],
-                    "removed": False,
-                }
+    head = [
+        {
+            "protocol": {
+                "minReaderVersion": snap.protocol.min_reader_version,
+                "minWriterVersion": snap.protocol.min_writer_version,
+                "readerFeatures": snap.protocol.reader_features or None,
+                "writerFeatures": snap.protocol.writer_features or None,
             }
-        )
-    for f in snapshot.files:
-        rows.append(
-            {
-                "add": {
-                    "path": _url_encode_path(f.path),
-                    "partitionValues": f.partition_values,
-                    "size": f.size,
-                    "modificationTime": f.modification_time,
-                    "dataChange": False,
-                    "stats": f.stats,
-                    **({"deletionVector": _dv_to_json(f.dv)} if f.dv else {}),
-                    **(
-                        {"baseRowId": f.base_row_id,
-                         "defaultRowCommitVersion": f.default_row_commit_version}
-                        if f.base_row_id is not None else {}
-                    ),
-                    **({"tags": f.tags} if f.tags else {}),
-                }
+        },
+        {
+            "metaData": {
+                "id": snap.metadata.id,
+                "name": snap.metadata.name,
+                "description": snap.metadata.description,
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": snap.metadata.schema_string,
+                "partitionColumns": snap.metadata.partition_columns,
+                "configuration": snap.metadata.configuration,
+                "createdTime": snap.metadata.created_time,
             }
+        },
+    ] + [
+        {"txn": {"appId": app, "version": v}}
+        for app, v in sorted(snap.app_transactions.items())
+    ] + [
+        {"domainMetadata": {"domain": d, "configuration": c,
+                            "removed": False}}
+        for d, c in sorted(snap.domain_metadata.items())
+    ]
+
+    def head_df(schema):
+        # Arrow-shipped JSON lines become a JVM-side local relation:
+        # no Python worker round trip per RDD slice
+        lines = pa.table({"value": [json.dumps(r) for r in head]})
+        return (
+            spark.createDataFrame(lines)
+            .select(F.from_json("value", schema).alias("a"))
+            .select("a.*")
         )
 
-    log_dir = os.path.join(snapshot.table_path, "_delta_log")
+    n_parts = parts or max(1, math.ceil(n_adds / _CHECKPOINT_PART_ROWS))
+    log_dir = os.path.join(snap.table_path, "_delta_log")
+    fs = fs_for(snap.table_path, spark)
+    prefix = f"{snap.version:020d}.checkpoint"
+    if snap.get_property("delta.checkpointPolicy", "").lower() == "v2":
+        fs.mkdirs(os.path.join(log_dir, "_sidecars"))
+        sidecars = _write_parts(
+            fs, log_dir, _with_stats_parsed(live, snap), n_parts,
+            lambda i, n: os.path.join("_sidecars", f"{uuid.uuid4()}.parquet"),
+        )
+        head = [{"checkpointMetadata": {"version": snap.version}}] + head + [
+            {"sidecar": {"path": os.path.basename(p), "sizeInBytes": st.size,
+                         "modificationTime": st.mtime_ms}}
+            for p, st in sidecars
+        ]
+        written = _write_parts(
+            fs, log_dir, head_df(CHECKPOINT_V2_SCHEMA), 1,
+            lambda i, n: f"{prefix}.{uuid.uuid4()}.parquet",
+        )
+    else:
+        frame = head_df(CHECKPOINT_SCHEMA).unionByName(
+            live, allowMissingColumns=True
+        )
+        written = _write_parts(
+            fs, log_dir, _with_stats_parsed(frame, snap), n_parts,
+            lambda i, n: f"{prefix}.parquet" if n == 1
+            else f"{prefix}.{i + 1:010d}.{n:010d}.parquet",
+        )
+    finals = [p for p, _ in written]
+    fs.write_bytes(
+        os.path.join(log_dir, "_last_checkpoint"),
+        json.dumps({
+            "version": snap.version,
+            "size": n_adds + len(head),
+            **({"parts": len(finals)} if len(finals) > 1 else {}),
+        }).encode(),
+    )
+    return finals
+
+
+def _write_parts(fs, log_dir: str, df, n_parts: int, name) -> list:
+    """Write ``df`` as up to ``n_parts`` parquet files into a staging
+    directory and move the i-th of n to ``log_dir/name(i, n)``.
+    Returns (final path, staged file status) pairs."""
     staging = os.path.join(log_dir, f".cp_{uuid.uuid4().hex}")
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame([(json.dumps(r),) for r in rows], "value string")
-    parsed = df.select(F.from_json("value", LOG_SCHEMA).alias("a")).select("a.*")
-    parsed = _with_stats_parsed(parsed, snapshot)
-    # repartition(1), not coalesce(1): the rows come from
-    # createDataFrame (defaultParallelism pickled-RDD slices) and
-    # coalesce would make ONE task drain every slice sequentially,
-    # paying a Python-worker round trip per slice (~5 s measured);
-    # repartition evaluates the slices as parallel map tasks first.
-    parsed.repartition(1).write.mode("overwrite").parquet(staging)
-
-    fs = fs_for(snapshot.table_path, spark)
-    cp_name = f"{snapshot.version:020d}.checkpoint.parquet"
-    final = os.path.join(log_dir, cp_name)
-    for st in fs.list_recursive(staging):
-        if not st.is_dir and st.path.endswith(".parquet"):
-            fs.rename(st.path, final)
+    df.repartition(n_parts).write.mode("overwrite").parquet(staging)
+    staged = sorted(
+        (
+            st for st in fs.list_recursive(staging)
+            if not st.is_dir and st.path.endswith(".parquet")
+        ),
+        key=lambda s: s.path,
+    )
+    out = []
+    for i, st in enumerate(staged):
+        dst = os.path.join(log_dir, name(i, len(staged)))
+        fs.rename(st.path, dst)
+        out.append((dst, st))
     for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
         fs.delete(st.path)
     fs.delete(staging)
-
-    fs.write_bytes(
-        os.path.join(log_dir, "_last_checkpoint"),
-        json.dumps({"version": snapshot.version, "size": len(rows)}).encode(),
-    )
-    return final
+    return out
 
 
 def _stats_struct_type(schema: StructType):
@@ -2283,290 +2385,6 @@ def _with_stats_parsed(df, snapshot):
     if json_off:
         add = add.withField("stats", F.lit(None).cast("string"))
     return df.withColumn("add", add)
-
-
-def write_checkpoint_spark(
-    spark, table_path: str, version: int | None = None, parts: int | None = None
-) -> list[str]:
-    """Distributed multi-part checkpoint: the live add set is derived
-    from the log ON THE EXECUTORS (checkpoint-aware ``actions_df`` +
-    window dedup — the same replay ``log_replay_df`` uses) and written
-    as ``N.checkpoint.<i>.<n>.parquet`` parts, so checkpointing a
-    1e6-file table never funnels the file list through one JSON-string
-    loop or one output file. The driver contributes only the
-    protocol/metaData/txn rows (O(1) + O(apps)).
-
-    The single-part :func:`write_checkpoint` remains the small-table
-    path; :func:`maybe_checkpoint` switches on file count.
-    """
-    import math
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from deltalake_datafusion_spark.delta.log_schema import LOG_SCHEMA
-    from deltalake_datafusion_spark.delta.snapshot import actions_df, load_snapshot
-
-    # metadata-only replay: the file set never touches the driver
-    snap = load_snapshot(
-        table_path, version=version, spark=spark, with_files=False
-    )
-    df = actions_df(spark, snap.table_path, snap.version)
-    acts = df.select(
-        "version",
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add").alias("add_action"),
-        F.col("add.path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-    live = (
-        acts.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & F.col("is_add"))
-        .select(
-            F.col("add_action").withField("dataChange", F.lit(False)).alias("add")
-        )
-    )
-    other = [f for f in LOG_SCHEMA.fieldNames() if f not in ("add", "commitInfo")]
-    ck = live.select(
-        "add",
-        *[F.lit(None).cast(LOG_SCHEMA[f].dataType).alias(f) for f in other],
-    )
-
-    # Driver rows: protocol + metaData + app transactions, shipped
-    # through the same JSON-parse path the single-part writer uses.
-    head_rows = [
-        {
-            "protocol": {
-                "minReaderVersion": snap.protocol.min_reader_version,
-                "minWriterVersion": snap.protocol.min_writer_version,
-                "readerFeatures": snap.protocol.reader_features or None,
-                "writerFeatures": snap.protocol.writer_features or None,
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.metadata.id,
-                "name": snap.metadata.name,
-                "description": snap.metadata.description,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.metadata.schema_string,
-                "partitionColumns": snap.metadata.partition_columns,
-                "configuration": snap.metadata.configuration,
-                "createdTime": snap.metadata.created_time,
-            }
-        },
-    ] + [
-        {"txn": {"appId": app, "version": v}}
-        for app, v in sorted(snap.app_transactions.items())
-    ] + [
-        {"domainMetadata": {"domain": d, "configuration": c,
-                            "removed": False}}
-        for d, c in sorted(snap.domain_metadata.items())
-    ]
-    head = (
-        spark.createDataFrame([(json.dumps(r),) for r in head_rows], "value string")
-        .select(F.from_json("value", LOG_SCHEMA).alias("a"))
-        .select("a.*")
-        .drop("commitInfo")
-        .select(*ck.columns)
-    )
-
-    n_live = live.count()  # metadata-scale count, sizes the parts
-    n_parts = parts or max(1, math.ceil(n_live / 500_000))
-    log_dir = os.path.join(snap.table_path, "_delta_log")
-    staging = os.path.join(log_dir, f".cp_{uuid.uuid4().hex}")
-    _with_stats_parsed(head.unionByName(ck), snap).repartition(
-        n_parts
-    ).write.mode("overwrite").parquet(staging)
-
-    fs = fs_for(snap.table_path, spark)
-    staged = sorted(
-        st.path
-        for st in fs.list_recursive(staging)
-        if not st.is_dir and st.path.endswith(".parquet")
-    )
-    finals = []
-    total = len(staged)
-    for i, src in enumerate(staged):
-        if total == 1:
-            name = f"{snap.version:020d}.checkpoint.parquet"
-        else:
-            name = (
-                f"{snap.version:020d}.checkpoint."
-                f"{i + 1:010d}.{total:010d}.parquet"
-            )
-        dst = os.path.join(log_dir, name)
-        fs.rename(src, dst)
-        finals.append(dst)
-    for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
-        fs.delete(st.path)
-    fs.delete(staging)
-
-    fs.write_bytes(
-        os.path.join(log_dir, "_last_checkpoint"),
-        json.dumps(
-            {
-                "version": snap.version,
-                "size": n_live + len(head_rows),
-                **({"parts": total} if total > 1 else {}),
-            }
-        ).encode(),
-    )
-    return finals
-
-
-def write_checkpoint_v2(
-    spark, table_path: str, version: int | None = None, parts: int | None = None
-) -> str:
-    """V2 checkpoint (Delta's v2Checkpoint table feature): the live
-    add set is derived on the executors (same metadata-only replay as
-    :func:`write_checkpoint_spark`) and written as UUID-named sidecar
-    parquet files under ``_delta_log/_sidecars/``; the top-level
-    ``N.checkpoint.<uuid>.parquet`` carries only protocol / metaData /
-    txn rows plus a ``checkpointMetadata`` action and one ``sidecar``
-    pointer per part. UUID naming means concurrent checkpointers can
-    never clobber each other, and readers pick any single complete
-    checkpoint instead of assembling classic multipart fragments."""
-    import math
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from deltalake_datafusion_spark.delta.log_schema import (
-        CHECKPOINT_V2_SCHEMA,
-        LOG_SCHEMA,
-    )
-    from deltalake_datafusion_spark.delta.snapshot import (
-        actions_df,
-        load_snapshot,
-    )
-
-    snap = load_snapshot(
-        table_path, version=version, spark=spark, with_files=False
-    )
-    if "v2Checkpoint" not in (snap.protocol.reader_features or []):
-        raise DeltaWriteError(
-            "v2 checkpoints need the v2Checkpoint table feature — "
-            "SET TBLPROPERTIES ('delta.checkpointPolicy' = 'v2') first"
-        )
-    df = actions_df(spark, snap.table_path, snap.version)
-    acts = df.select(
-        "version",
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add").alias("add_action"),
-        F.col("add.path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-    live = (
-        acts.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & F.col("is_add"))
-        .select(
-            F.col("add_action").withField("dataChange", F.lit(False)).alias("add"),
-            F.lit(None).cast(LOG_SCHEMA["remove"].dataType).alias("remove"),
-        )
-    )
-
-    n_live = live.count()
-    n_parts = parts or max(1, math.ceil(n_live / 500_000))
-    log_dir = os.path.join(snap.table_path, "_delta_log")
-    sidecar_dir = os.path.join(log_dir, "_sidecars")
-    staging = os.path.join(log_dir, f".cp2_{uuid.uuid4().hex}")
-    _with_stats_parsed(live, snap).repartition(n_parts).write.mode(
-        "overwrite"
-    ).parquet(staging)
-
-    fs = fs_for(snap.table_path, spark)
-    fs.mkdirs(sidecar_dir)
-    sidecars = []
-    for st in sorted(
-        (
-            s
-            for s in fs.list_recursive(staging)
-            if not s.is_dir and s.path.endswith(".parquet")
-        ),
-        key=lambda s: s.path,
-    ):
-        name = f"{uuid.uuid4()}.parquet"
-        fs.rename(st.path, os.path.join(sidecar_dir, name))
-        sidecars.append(
-            {
-                "path": name,
-                "sizeInBytes": st.size,
-                "modificationTime": st.mtime_ms,
-            }
-        )
-    for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
-        fs.delete(st.path)
-    fs.delete(staging)
-
-    head_rows: list[dict] = [
-        {"checkpointMetadata": {"version": snap.version}},
-        {
-            "protocol": {
-                "minReaderVersion": snap.protocol.min_reader_version,
-                "minWriterVersion": snap.protocol.min_writer_version,
-                "readerFeatures": snap.protocol.reader_features or None,
-                "writerFeatures": snap.protocol.writer_features or None,
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.metadata.id,
-                "name": snap.metadata.name,
-                "description": snap.metadata.description,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.metadata.schema_string,
-                "partitionColumns": snap.metadata.partition_columns,
-                "configuration": snap.metadata.configuration,
-                "createdTime": snap.metadata.created_time,
-            }
-        },
-    ]
-    head_rows += [
-        {"txn": {"appId": app, "version": v}}
-        for app, v in sorted(snap.app_transactions.items())
-    ]
-    head_rows += [
-        {"domainMetadata": {"domain": d, "configuration": c,
-                            "removed": False}}
-        for d, c in sorted(snap.domain_metadata.items())
-    ]
-    head_rows += [{"sidecar": s} for s in sidecars]
-
-    top_staging = os.path.join(log_dir, f".cp2t_{uuid.uuid4().hex}")
-    head = (
-        spark.createDataFrame(
-            [(json.dumps(r),) for r in head_rows], "value string"
-        )
-        .select(F.from_json("value", CHECKPOINT_V2_SCHEMA).alias("a"))
-        .select("a.*")
-    )
-    # repartition(1): see the v1 checkpoint writer — coalesce over a
-    # createDataFrame frame drains its slices sequentially in 1 task
-    head.repartition(1).write.mode("overwrite").parquet(top_staging)
-    cp_name = f"{snap.version:020d}.checkpoint.{uuid.uuid4()}.parquet"
-    final = os.path.join(log_dir, cp_name)
-    for st in fs.list_recursive(top_staging):
-        if not st.is_dir and st.path.endswith(".parquet"):
-            fs.rename(st.path, final)
-    for st in sorted(
-        fs.list_recursive(top_staging), key=lambda s: -len(s.path)
-    ):
-        fs.delete(st.path)
-    fs.delete(top_staging)
-
-    fs.write_bytes(
-        os.path.join(log_dir, "_last_checkpoint"),
-        json.dumps(
-            {"version": snap.version, "size": n_live + len(head_rows)}
-        ).encode(),
-    )
-    return final
-
-
-# Above this live-file count, checkpoints are derived and written
-# distributively instead of through the driver row loop.
-DISTRIBUTED_CHECKPOINT_THRESHOLD = 100_000
 
 
 def _state_totals(snapshot: Snapshot) -> dict:
@@ -2689,9 +2507,9 @@ def maybe_checkpoint_light(spark, table_path: str) -> None:
     """:func:`maybe_checkpoint` for tables whose file lists stay OFF
     the driver (the distributed DML planner path): the ``.crc`` state
     totals come from ONE aggregate over the Spark-side log replay
-    (``log_replay_df``), the checkpoint — when the interval hits —
-    from the Spark-job writers, and log cleanup runs as usual. Driver
-    memory stays ∝ metadata, never ∝ file count."""
+    (``log_replay_df``), and the interval checkpoint takes its adds
+    from the same replay. Driver memory stays ∝ metadata, never ∝
+    file count."""
     from pyspark.sql import functions as F
 
     from deltalake_datafusion_spark.delta.snapshot import (
@@ -2700,74 +2518,45 @@ def maybe_checkpoint_light(spark, table_path: str) -> None:
     )
 
     snapshot = load_snapshot(table_path, spark=spark, with_files=False)
-    row = (
-        # pinned to the snapshot's version: a commit landing between
-        # the two reads must not leak NEWER totals into THIS version's
-        # .crc (verify would raise on the mismatch later)
-        log_replay_df(spark, table_path, snapshot.version)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("size"), F.lit(0)).alias("bytes"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("deletionVector.storageType").isNotNull(),
-                        F.col("deletionVector.cardinality"),
-                    )
-                ),
-                F.lit(0),
-            ).alias("dv_records"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("deletionVector.storageType").isNotNull(), 1
-                    )
-                ),
-                F.lit(0),
-            ).alias("dv_count"),
-        )
-        .collect()[0]
-    )
-    write_version_checksum(
-        snapshot,
-        spark,
-        totals={
+    # pinned to the snapshot's version: a commit landing between the
+    # two reads must not leak NEWER totals into THIS version's .crc
+    # (verify would raise on the mismatch later)
+    adds = log_replay_df(spark, table_path, snapshot.version)
+    has_dv = F.col("deletionVector.storageType").isNotNull()
+    row = adds.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum("size"), F.lit(0)).alias("bytes"),
+        F.coalesce(
+            F.sum(F.when(has_dv, F.col("deletionVector.cardinality"))),
+            F.lit(0),
+        ).alias("dv_records"),
+        F.coalesce(F.sum(F.when(has_dv, 1)), F.lit(0)).alias("dv_count"),
+    ).collect()[0]
+    _post_commit(
+        spark, snapshot,
+        {
             "numFiles": row["n"],
             "tableSizeBytes": row["bytes"],
             "numDeletedRecordsOpt": row["dv_records"],
             "numDeletionVectorsOpt": row["dv_count"],
         },
+        lambda: _write_checkpoint(spark, snapshot, adds, row["n"]),
     )
-    interval = int(snapshot.get_property("delta.checkpointInterval", "10") or "10")
-    if interval > 0 and snapshot.version > 0 and (snapshot.version % interval == 0):
-        if snapshot.get_property("delta.checkpointPolicy", "").lower() == "v2":
-            write_checkpoint_v2(spark, snapshot.table_path, snapshot.version)
-        else:
-            write_checkpoint_spark(spark, snapshot.table_path, snapshot.version)
-        if (
-            snapshot.get_property(
-                "delta.enableExpiredLogCleanup", "true"
-            ).lower()
-            != "false"
-        ):
-            from deltalake_datafusion_spark.delta.log_cleanup import (
-                cleanup_expired_logs,
-            )
-
-            cleanup_expired_logs(spark, snapshot.table_path)
-    maybe_compact_log(spark, snapshot)
 
 
 def maybe_checkpoint(spark, snapshot: Snapshot) -> None:
-    write_version_checksum(snapshot, spark)
+    """Post-commit hook: ``.crc``, the interval checkpoint from the
+    snapshot's file table, log cleanup and log compaction."""
+    _post_commit(
+        spark, snapshot, None, lambda: write_checkpoint(spark, snapshot)
+    )
+
+
+def _post_commit(spark, snapshot: Snapshot, totals, checkpoint) -> None:
+    write_version_checksum(snapshot, spark, totals=totals)
     interval = int(snapshot.get_property("delta.checkpointInterval", "10") or "10")
     if interval > 0 and snapshot.version > 0 and (snapshot.version % interval == 0):
-        if snapshot.get_property("delta.checkpointPolicy", "").lower() == "v2":
-            write_checkpoint_v2(spark, snapshot.table_path, snapshot.version)
-        elif len(snapshot.files) > DISTRIBUTED_CHECKPOINT_THRESHOLD:
-            write_checkpoint_spark(spark, snapshot.table_path, snapshot.version)
-        else:
-            write_checkpoint(spark, snapshot)
+        checkpoint()
         if (
             snapshot.get_property(
                 "delta.enableExpiredLogCleanup", "true"

@@ -6,15 +6,13 @@ import glob
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from deltalake_datafusion_spark.delta.ops import delete_delta
 from deltalake_datafusion_spark.delta.scan import read_delta
 from deltalake_datafusion_spark.delta.snapshot import load_snapshot
 from deltalake_datafusion_spark.delta.writer import (
-    DeltaWriteError,
-    write_checkpoint_v2,
+    write_checkpoint,
     write_delta,
 )
 from deltalake_datafusion_spark.sql.dispatcher import sql
@@ -43,7 +41,7 @@ def _v2_table(spark, tmp_path, n_commits=3):
 
 def test_v2_checkpoint_roundtrip(spark, tmp_path):
     path = _v2_table(spark, tmp_path)
-    cp = write_checkpoint_v2(spark, path)
+    cp = write_checkpoint(spark, load_snapshot(path, spark=spark))
     assert os.path.basename(cp).count(".") == 3  # N.checkpoint.<uuid>.parquet
     assert glob.glob(os.path.join(path, "_delta_log", "_sidecars", "*.parquet"))
 
@@ -61,11 +59,19 @@ def test_v2_checkpoint_roundtrip(spark, tmp_path):
     assert read_delta(spark, path, predicate="g = 1").count() == 10
 
 
-def test_v2_checkpoint_requires_feature(spark, tmp_path):
+def test_checkpoint_layout_follows_policy(spark, tmp_path):
+    """Without delta.checkpointPolicy=v2 the writer emits the classic
+    single-file layout: no UUID name, no sidecars."""
     path = os.path.join(str(tmp_path), "plain")
     write_delta(spark, spark.range(5).select("id"), path)
-    with pytest.raises(DeltaWriteError, match="v2Checkpoint"):
-        write_checkpoint_v2(spark, path)
+    snap = load_snapshot(path, spark=spark)
+    cp = write_checkpoint(spark, snap)
+    assert os.path.basename(cp) == f"{0:020d}.checkpoint.parquet"
+    assert not os.path.exists(os.path.join(path, "_delta_log", "_sidecars"))
+    with open(os.path.join(path, "_delta_log", "_last_checkpoint")) as fh:
+        last = json.load(fh)
+    # protocol + metaData + one row per add
+    assert last == {"version": 0, "size": 2 + len(snap.files)}
 
 
 def test_checkpoint_policy_property_flows_end_to_end(spark, tmp_path):
@@ -103,7 +109,7 @@ def test_v2_checkpoint_actions_df_and_log_replay(spark, tmp_path):
     from deltalake_datafusion_spark.delta.snapshot import actions_df
 
     path = _v2_table(spark, tmp_path)
-    write_checkpoint_v2(spark, path)
+    write_checkpoint(spark, load_snapshot(path, spark=spark))
     snap_before = load_snapshot(path, spark=spark)
     for v in range(snap_before.version + 1):
         os.remove(os.path.join(path, "_delta_log", f"{v:020d}.json"))

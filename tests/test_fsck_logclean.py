@@ -84,7 +84,6 @@ def test_cleanup_expired_logs(spark, tmp_path):
 
 
 def test_cleanup_drops_stale_checkpoints_not_live_sidecars(spark, tmp_path):
-    from deltalake_datafusion_spark.delta.writer import write_checkpoint_v2
 
     path = os.path.join(str(tmp_path), "t")
     write_delta(
@@ -93,9 +92,9 @@ def test_cleanup_drops_stale_checkpoints_not_live_sidecars(spark, tmp_path):
         path,
         configuration={"delta.checkpointPolicy": "v2"},
     )
-    write_checkpoint_v2(spark, path)  # stale after the next one
+    write_checkpoint(spark, load_snapshot(path, spark=spark))  # stale after the next one
     write_delta(spark, spark.range(10, 20).select("id"), path, mode="append")
-    write_checkpoint_v2(spark, path)
+    write_checkpoint(spark, load_snapshot(path, spark=spark))
 
     res = cleanup_expired_logs(spark, path, retention_ms=0)
     assert res["checkpoints_deleted"] == 1
@@ -119,7 +118,6 @@ def test_cleanup_protected_checkpoint_keeps_shared_sidecars(spark, tmp_path):
     import pyarrow.parquet as papq
 
     from deltalake_datafusion_spark.delta.log_cleanup import _sidecars_of
-    from deltalake_datafusion_spark.delta.writer import write_checkpoint_v2
 
     path = os.path.join(str(tmp_path), "t")
     write_delta(
@@ -131,14 +129,14 @@ def test_cleanup_protected_checkpoint_keeps_shared_sidecars(spark, tmp_path):
             "delta.requireCheckpointProtectionBeforeVersion": "2",
         },
     )
-    write_checkpoint_v2(spark, path)  # protected (v0 < 2)
+    write_checkpoint(spark, load_snapshot(path, spark=spark))  # protected (v0 < 2)
     log_dir = os.path.join(path, "_delta_log")
     cp0 = glob.glob(os.path.join(log_dir, "*.checkpoint.*.parquet"))[0]
     shared = sorted(_sidecars_of(cp0))
     assert shared
     for i in range(3):  # commits v1..v3
         write_delta(spark, spark.range(10).select("id"), path, mode="append")
-    write_checkpoint_v2(spark, path)  # latest, kept
+    write_checkpoint(spark, load_snapshot(path, spark=spark))  # latest, kept
 
     # hand-craft an UNPROTECTED expired v2 checkpoint at version 2 that
     # references the protected checkpoint's sidecar (the Delta spec

@@ -234,3 +234,54 @@ def test_planning_builds_add_files_only_for_kept(tmp_path, monkeypatch):
     kept = scan_files(snap, f"id >= {n * 1000 - n * 10}")  # ~1%
     assert len(kept) == n // 100
     assert built["n"] == len(kept)
+
+
+def test_spark_skipping_compares_literals_exactly(spark, tmp_path):
+    """The Spark-side skipping column follows the driver's exact rule:
+    a non-integral literal on a long column is never narrowed to the
+    column type (``id < 10.5`` must keep a file whose min is 10)."""
+    from deltalake_datafusion_spark.delta.predicates import prune_files_df
+    from deltalake_datafusion_spark.delta.snapshot import (
+        load_snapshot,
+        log_replay_df,
+    )
+
+    path = str(tmp_path / "t")
+    os.makedirs(os.path.join(path, "_delta_log"))
+    schema = StructType([StructField("id", LongType())])
+    bounds = {"a": (0, 9), "b": (10, 10), "c": (11, 20), "d": (9, 10),
+              "e": None}
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {
+            "id": "t", "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema.json(), "partitionColumns": [],
+            "configuration": {}, "createdTime": 0,
+        }},
+    ] + [
+        {"add": {
+            "path": f"{name}.parquet", "partitionValues": {}, "size": 1,
+            "modificationTime": 0, "dataChange": True,
+            "stats": None if b is None else json.dumps({
+                "numRecords": 2, "minValues": {"id": b[0]},
+                "maxValues": {"id": b[1]}, "nullCount": {"id": 0},
+            }),
+        }}
+        for name, b in bounds.items()
+    ]
+    with open(os.path.join(path, "_delta_log", f"{0:020d}.json"), "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+
+    snap = load_snapshot(path)
+    files_df = log_replay_df(spark, path)
+    expected = {
+        "id < 10.5": "abde",
+        "id >= 9.5": "bcde",
+        "id = 10.5": "e",
+        "id IN (10.5, 11)": "ce",
+    }
+    for sql, names in expected.items():
+        want = [f"{n}.parquet" for n in names]
+        assert [f.path for f in scan_files(snap, sql)] == want, sql
+        got = prune_files_df(files_df, sql, schema, []).select("path")
+        assert sorted(r["path"] for r in got.collect()) == want, sql
